@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Proc
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line with per-query seconds.
@@ -11,108 +11,54 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** One machine-load sample for the metric JSON: 1/5/15-min loadavg plus
-    * the io-pressure stall percentages (`/proc/pressure/io` some/full
-    * avg10). BENCH.md's adjudication rule — believe a regression only
-    * after a quiet solo TimeOne — needs the run's OWN load on record;
-    * without it every environmentally contaminated driver run costs a
-    * judge session to re-derive what these two files would have said.
+  /** One machine-load sample for the metric JSON: 1/5/15-min loadavg, the
+    * io-pressure stall percentages (`/proc/pressure/io` some/full avg10)
+    * and cumulative guest CPU ticks. BENCH.md's adjudication rule needs
+    * the run's OWN load on record. The start→end STEAL delta is the one
+    * signal that sees HOST-side contention — loadavg and io-pressure are
+    * guest-local and read clean while a co-tenant eats the physical cores
+    * (measured: the same drain gate at 4.1–5.1 s in a steal-quiet window
+    * and 5.7–7.3 s hours later, identical code, loadavg ≈ 0 both times).
     */
   private def loadSample(): String = {
-    def read(p: String): Option[String] =
-      try Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => None }
-    val load = read("/proc/loadavg").map(_.trim.split("\\s+").take(3))
-      .filter(_.length == 3)
-      .map(a => s"""[${a.mkString(",")}]""").getOrElse("null")
-    // lines look like: "some avg10=1.23 avg60=... avg300=... total=..."
-    def pct(line: String): String =
-      line.split("\\s+").collectFirst {
-        case kv if kv.startsWith("avg10=") => kv.stripPrefix("avg10=")
-      }.getOrElse("null")
-    val (ioSome, ioFull) = read("/proc/pressure/io").map { s =>
-      val ls = s.linesIterator.toSeq
-      (ls.find(_.startsWith("some")).map(pct).getOrElse("null"),
-       ls.find(_.startsWith("full")).map(pct).getOrElse("null"))
-    }.getOrElse(("null", "null"))
-    // cumulative guest CPU ticks from /proc/stat's aggregate line
-    // (user nice system idle iowait irq softirq STEAL ...): the
-    // start→end STEAL delta is the one signal that sees HOST-side
-    // contention — loadavg and io-pressure are guest-local and read
-    // clean while a co-tenant eats the physical cores (measured: the
-    // same drain gate at 4.1–5.1 s in a steal-quiet window and
-    // 5.7–7.3 s hours later, identical code, loadavg ≈ 0 both times)
-    val (steal, total) = read("/proc/stat")
-      .flatMap(_.linesIterator.find(_.startsWith("cpu ")))
-      .map { l =>
-        val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7).toString else "null", f.sum.toString)
-      }.getOrElse(("null", "null"))
-    s"""{"loadavg":$load,"io_some_avg10":$ioSome,"io_full_avg10":$ioFull,""" +
-      s""""cpu_steal_ticks":$steal,"cpu_total_ticks":$total}"""
+    val io = Proc.read("/proc/pressure/io")
+    def io10(kind: String) = io.flatMap(Proc.avg10(_, kind)).getOrElse("null")
+    val ticks = stealTicks()
+    s"""{"loadavg":${loadavg().fold("null")(_.mkString("[", ",", "]"))},""" +
+      s""""io_some_avg10":${io10("some")},"io_full_avg10":${io10("full")},""" +
+      s""""cpu_steal_ticks":${ticks.fold("null")(_._1.toString)},""" +
+      s""""cpu_total_ticks":${ticks.fold("null")(_._2.toString)}}"""
   }
 
   /** Extended machine sample for the FILE-side metric line only (the
     * round-14 verdict's ask: attribute or bound the ~2x contamination
     * channel that CPU steal does not see). Additive fields, never on the
     * stdout line (which is budgeted) and never on the timing path:
-    * cumulative /proc/diskstats totals (sectors read/written, ms doing
-    * I/O summed over devices — a start→end delta exposes disk-level
-    * contention) and /proc/pressure/memory avg10 stall percentages.
+    * cumulative whole-disk /proc/diskstats totals (sectors read/written,
+    * ms doing I/O — a start→end delta exposes disk-level contention) and
+    * /proc/pressure/memory avg10 stall percentages.
     */
   private def extSample(): String = {
-    def read(p: String): Option[String] =
-      try Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => None }
-    val (secR, secW, ioMs) = read("/proc/diskstats").map { s =>
-      var r = 0L; var w = 0L; var m = 0L
-      s.linesIterator.foreach { l =>
-        val f = l.trim.split("\\s+")
-        if (f.length >= 13) {
-          r += f(5).toLong; w += f(9).toLong; m += f(12).toLong
-        }
-      }
-      (r.toString, w.toString, m.toString)
-    }.getOrElse(("null", "null", "null"))
-    def pct(line: String): String =
-      line.split("\\s+").collectFirst {
-        case kv if kv.startsWith("avg10=") => kv.stripPrefix("avg10=")
-      }.getOrElse("null")
-    val (memSome, memFull) = read("/proc/pressure/memory").map { s =>
-      val ls = s.linesIterator.toSeq
-      (ls.find(_.startsWith("some")).map(pct).getOrElse("null"),
-       ls.find(_.startsWith("full")).map(pct).getOrElse("null"))
-    }.getOrElse(("null", "null"))
-    s"""{"disk_sectors_read":$secR,"disk_sectors_written":$secW,""" +
-      s""""disk_io_ms":$ioMs,"mem_some_avg10":$memSome,""" +
-      s""""mem_full_avg10":$memFull}"""
+    val disk = Proc.read("/proc/diskstats").flatMap(Proc.diskTotals)
+    def d(f: ((Long, Long, Long)) => Long) = disk.fold("null")(f(_).toString)
+    val mem = Proc.read("/proc/pressure/memory")
+    def mem10(kind: String) = mem.flatMap(Proc.avg10(_, kind)).getOrElse("null")
+    s"""{"disk_sectors_read":${d(_._1)},"disk_sectors_written":${d(_._2)},""" +
+      s""""disk_io_ms":${d(_._3)},"mem_some_avg10":${mem10("some")},""" +
+      s""""mem_full_avg10":${mem10("full")}}"""
   }
 
-  /** Cumulative (steal, total) CPU ticks from /proc/stat's aggregate
-    * line, (-1, -1) when unreadable — sampled around EACH gate so a
+  /** Cumulative (steal, total) CPU ticks — sampled around EACH gate so a
     * contaminated run self-identifies per gate, not just run-level.
     * BENCH_r13 (916 s at 2.5% run-level steal) cost a judge session to
     * adjudicate gate-by-gate; with per-gate windows the adjudication is
     * mechanical (benchdiff annotates any riser whose window was dirty).
     */
-  private def stealTicks(): (Long, Long) =
-    try {
-      val l = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")),
-          java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.find(_.startsWith("cpu ")).get
-      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-      (if (f.length > 7) f(7) else -1L, f.sum)
-    } catch { case _: Throwable => (-1L, -1L) }
+  private def stealTicks(): Option[(Long, Long)] =
+    Proc.read("/proc/stat").flatMap(Proc.cpuTicks)
 
-  private def load1(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      .trim.split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+  private def loadavg(): Option[Seq[String]] =
+    Proc.read("/proc/loadavg").flatMap(Proc.loadavg)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -143,7 +89,7 @@ object Bench {
     // sentinel -1 for it, keep it out of the total, surface it on stderr
     // and in a "failed" list the harness can see
     val perGate = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (st0, tt0) = stealTicks()
+      val ticks0 = stealTicks()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }
@@ -152,12 +98,13 @@ object Bench {
           false
         }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      val (st1, tt1) = stealTicks()
-      val stealPct =
-        if (st0 >= 0 && st1 >= 0 && tt1 > tt0)
+      val stealPct = (ticks0, stealTicks()) match {
+        case (Some((st0, tt0)), Some((st1, tt1))) if tt1 > tt0 =>
           math.rint(10000.0 * (st1 - st0) / (tt1 - tt0)) / 100
-        else -1.0
-      (name, sec, stealPct, load1())
+        case _ => -1.0
+      }
+      val load1 = loadavg().flatMap(_.head.toDoubleOption).getOrElse(-1.0)
+      (name, sec, stealPct, load1)
     }
     val results = perGate.map { case (n, s, _, _) => (n, s) }
     val endLoad = loadSample()

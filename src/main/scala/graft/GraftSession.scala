@@ -2,27 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended configuration and its
-  * custom functions registered for SQL use.
-  *
-  * `GraftSession.builder()` applies: AQE (with skew-join handling), UTC
-  * session time zone, nanos-as-long parquet compatibility, and a shuffle
-  * partition count suited to the master. [[register]] exposes the custom
-  * Catalyst expressions (`polyhash`, `simhash64`, `minhash_sig`) to
-  * `spark.sql(...)` users.
+/** The engine's one session constructor, [[harnessSession]], plus the
+  * pieces it installs: [[register]] exposes the custom Catalyst
+  * expressions (`polyhash`, `simhash64`, `minhash_sig`, ...) and the
+  * `as_of` table function to `spark.sql(...)` users, and
+  * [[installOptimizations]] adds graft's optimizer rules and planner
+  * strategy.
   */
 object GraftSession {
-
-  def builder(master: String = "local[*]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
 
   /** (name, builder) for every SQL-exposed custom expression — the single
     * source of truth shared by [[register]] (programmatic sessions) and
@@ -172,21 +159,13 @@ object GraftSession {
     }
   }
 
-  /** Build + register functions + install optimizer rules in one call. */
-  def create(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
-    register(spark)
-    installOptimizations(spark)
-    spark
-  }
-
-  /** The driver-contract harness session shared by every runnable main
-    * (Verify, VerifySome, Bench, TimeOne): ONE definition of the config
-    * surface, so a targeted VerifySome or TimeOne run is guaranteed to
-    * execute under exactly the session the full Verify/Bench sweeps use —
-    * a config drift here would make targeted re-verification silently
-    * meaningless. `SPARK_GRAFT_CPUS` sizes both the master and the
-    * shuffle-partition count.
+  /** The session every runnable main (Tool, Verify, Bench, WeatherDemo)
+    * and the `perfbench` harness build: ONE definition of the config
+    * surface, so a targeted `Tool verify` or `Tool probe` run executes
+    * under exactly the session a full Bench sweep uses — a config drift
+    * here would make targeted re-verification silently meaningless.
+    * `SPARK_GRAFT_CPUS` sizes both the master and the shuffle-partition
+    * count.
     */
   def harnessSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -220,7 +199,7 @@ object GraftSession {
       .config("spark.cleaner.periodicGC.interval", "2min")
       // RocksDB state-store commits upload a full snapshot (zip + fsync
       // of every sst file, per store, per batch) by default — measured
-      // (DrainProbe, p_stream_join_rocks: 8 partitions × 4 join stores):
+      // (`Tool probe`, p_stream_join_rocks: 8 partitions × 4 join stores):
       // rocksdbCommitFileSyncLatencyMs was ~40% of summed commit time
       // and SnapshotLastUploaded advanced every batch. Changelog
       // checkpointing writes the batch's delta instead and defers

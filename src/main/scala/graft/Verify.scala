@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+/** The correctness dump's original entry point,
+  * `sbt "runMain graft.Verify <sfDir> <outDir>"`: [[Tool]]'s `verify` verb,
+  * kept for callers that run this name and read its output directory. It
+  * keeps this entry point's exit code too: a failed gate is logged to
+  * stderr and the run still exits 0, where `Tool verify` exits 1.
+  */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val spark = GraftSession.harnessSession()
-    new java.io.File(outDir).mkdirs()
-    // Write the oracle map BEFORE the dump loop: if the driver's budget
-    // kills this process mid-run, the gates that DID dump are still
-    // comparable — an end-of-run write would discard all of them.
-    // escaping via util.Json — see its doc for why this must be exact
-    def q(s: String): String = graft.util.Json.str(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // clear any stale dump FIRST: if this attempt fails before the
-      // overwrite executes, a reused outDir must not let the compare
-      // score a previous run's parquet as this round's result
-      graft.util.Scratch.deleteTree(Paths.get(outDir, name))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = Tool.execute("verify" +: args.toSeq)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.gen.StationSource
 import graft.lake.Archive
 import graft.serve.QueryApi
@@ -12,14 +11,7 @@ import graft.streaming.WeatherPipeline
   */
 object WeatherDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("weather-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harnessSession()
 
     val base = java.nio.file.Files.createTempDirectory("weather-demo")
     val srcDir = s"$base/wire"; val lakeDir = s"$base/lake"

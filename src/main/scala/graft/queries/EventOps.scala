@@ -292,7 +292,7 @@ object EventOps {
     // the view drop lives in the SAME finally as the rest of the cleanup:
     // a guard trip throws out of this block, and the UUID-named memory
     // sink must not stay registered (holding its buffered rows in driver
-    // memory) for the rest of a Verify/Bench sweep
+    // memory) for the rest of a `Tool verify`/Bench sweep
     try {
       // pollInputRows: a ProcessingTime-time-mode stateful operator
       // (value-state TTL / processing-time timers) reports pending work

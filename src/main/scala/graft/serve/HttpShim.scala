@@ -3,6 +3,7 @@ package graft.serve
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import graft.util.Json
 
 /** K6 — minimal HTTP façade over [[QueryApi]], JDK-only (no deps).
   *
@@ -18,28 +19,13 @@ import java.nio.charset.StandardCharsets
   */
 class HttpShim(api: QueryApi, port: Int = 0) {
 
-  /** RFC 8259 string escaping — the serving layer must emit valid JSON for
-    * ANY caller-supplied latest table (QueryApi accepts arbitrary frames,
-    * so upstream normalization cannot be assumed here).
-    */
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   private def rowJson(r: org.apache.spark.sql.Row): String = {
     // weather fields accessed BY NAME: a caller's table may order the
     // struct differently, and ordinal access would silently swap readings
     val w = r.getStruct(r.fieldIndex("weather"))
     s"""{"station_id":${r.getAs[Long]("station_id")},"s_no":${r.getAs[Long]("s_no")},""" +
-      s""""battery_status":${jsonStr(r.getAs[String]("battery_status"))},""" +
-      s""""status_timestamp":${jsonStr(String.valueOf(r.getAs[java.sql.Timestamp]("status_timestamp")))},""" +
+      s""""battery_status":${Json.str(r.getAs[String]("battery_status"))},""" +
+      s""""status_timestamp":${Json.str(String.valueOf(r.getAs[java.sql.Timestamp]("status_timestamp")))},""" +
       s""""weather":{"humidity":${w.getAs[Int]("humidity")},"temperature":${w.getAs[Int]("temperature")},"wind_speed":${w.getAs[Int]("wind_speed")}}}"""
   }
 

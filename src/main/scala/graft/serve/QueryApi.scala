@@ -22,8 +22,13 @@ class QueryApi(spark: SparkSession, latestTable: DataFrame,
   def point(stationId: Long): Option[org.apache.spark.sql.Row] =
     LatestState.point(latestTable, stationId).collect().headOption
 
-  /** GET /stations — full scan (ref: CentralStationServer.java:38-41). */
-  def scan(): DataFrame = latestTable
+  /** GET /stations — full scan (ref: CentralStationServer.java:38-41).
+    * A freshly planned frame per call: a Dataset caches its executed plan,
+    * and planning is when a memory-sink table reads its rows, so handing
+    * out `latestTable` itself would serve every scan the rows of the first.
+    */
+  def scan(): DataFrame =
+    org.apache.spark.sql.GraftBridge.ofRows(spark, latestTable.queryExecution.logical)
 
   /** SQL over the latest view — the generalization the reference lacks. */
   def sql(query: String): DataFrame = spark.sql(query)

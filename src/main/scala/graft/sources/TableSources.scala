@@ -19,12 +19,6 @@ object TableSources {
       .option("mode", "DROPMALFORMED") // parse-failure drop, like T1
       .csv(path)
 
-  def jsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("mode", "DROPMALFORMED")
-      .json(path)
-
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

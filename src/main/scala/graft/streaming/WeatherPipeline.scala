@@ -106,16 +106,8 @@ object WeatherPipeline {
     * winner (cost ∝ rows appended since the query started — the serving
     * layer's QueryApi/HttpShim should be handed THIS frame).
     */
-  def latestSnapshot(spark: SparkSession, tableName: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.table(tableName)
-      .groupBy(col("station_id"))
-      .agg(max_by(
-        struct(col("s_no"), col("battery_status"), col("status_timestamp"),
-          col("weather")),
-        struct(col("status_timestamp"), col("s_no"))).as("r"))
-      .select(col("station_id"), col("r.*"))
-  }
+  def latestSnapshot(spark: SparkSession, tableName: String): DataFrame =
+    LatestState.latest(spark.table(tableName))
 
   /** Fork (b): the partitioned lake. */
   def startArchive(archive: DataFrame, path: String, checkpoint: String,

@@ -1,10 +1,11 @@
 package graft.util
 
-/** Minimal JSON string escaping shared by the harness mains (Verify,
-  * Bench): backslash, quote, and ALL control chars — a tab or CR in
-  * builder-authored SQL, or a quote in an env-supplied path, would
-  * otherwise make the driver's json.load fail and silently zero a
-  * round's correctness or bench.
+/** The program's one JSON string escaper (RFC 8259): backslash, quote,
+  * and ALL control chars. Callers: `Tool verify` (oracle_sql.json),
+  * Bench (the metric lines) and [[graft.serve.HttpShim]] (served rows).
+  * A tab or CR in builder-authored SQL, a quote in an env-supplied path
+  * or any string in a caller-supplied latest table would otherwise make
+  * the reader's JSON parse fail.
   */
 object Json {
   def str(s: String): String = "\"" + s.flatMap {

@@ -35,10 +35,4 @@ private[graft] final class LruMemo[K, V <: AnyRef](maxEntries: Int) {
   def clear(): Unit = map.synchronized(map.clear())
 
   def size: Int = map.synchronized(map.size)
-
-  /** Keys in eviction order (least-recently-used first) — for specs. */
-  private[graft] def keysByRecency: Seq[K] = map.synchronized {
-    import scala.jdk.CollectionConverters._
-    map.keySet.asScala.toSeq
-  }
 }

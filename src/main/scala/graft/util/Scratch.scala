@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths}
   * and recursively deleted by a shutdown hook. Gate queries that stage
   * files (streaming sources, export round-trips, checkpoints) return lazy
   * DataFrames still reading from these paths, so deletion must wait for
-  * JVM exit — without the hook every Verify/Bench sweep strands staged
+  * JVM exit — without the hook every `Tool verify`/Bench sweep strands staged
   * copies of the input tables in the scratch filesystem.
   *
   * Root selection (spark_optimization_guide §6 — I/O layout): everything
@@ -37,7 +37,7 @@ import java.nio.file.{Files, Path, Paths}
   * root is logged once at first use so the choice is never silent.
   *
   * The per-process subdirectory keeps concurrent JVMs (sbt test forks,
-  * a Verify beside a Bench) from colliding and makes the shutdown sweep
+  * a `Tool verify` beside a Bench) from colliding and makes the shutdown sweep
   * one recursive delete.
   */
 object Scratch {
@@ -78,7 +78,7 @@ object Scratch {
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     created.forEach { p =>
-      try deleteRecursively(p) catch { case _: Throwable => () }
+      try deleteTree(p) catch { case _: Throwable => () }
     }
   }))
 
@@ -89,7 +89,7 @@ object Scratch {
   /** Recursive delete that does NOT follow symlinks: a link inside a
     * scratch dir pointing at real data (a future staging optimization)
     * must have the LINK removed, never the target's contents. Public —
-    * also the stale-output cleaner for [[graft.Verify]].
+    * also the stale-output cleaner for `Tool verify`.
     */
   def deleteTree(p: Path): Unit = {
     if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
@@ -98,6 +98,4 @@ object Scratch {
     }
     Files.deleteIfExists(p)
   }
-
-  private def deleteRecursively(p: Path): Unit = deleteTree(p)
 }

@@ -270,7 +270,7 @@ class ScaleSpec extends SparkSpec {
     // shuffle must be a handful of partial-aggregate records, never the
     // input rows — the map-side-combine claim, measured
     val (rows, bytes, records) =
-      graft.ShuffleAudit.audit(spark, "/root/testdata/sf0.001",
+      graft.Tool.audit(spark, "/root/testdata/sf0.001",
         "q1_pricing_summary")
     assert(rows == 6)
     assert(records > 0 && records <= 64,
@@ -284,7 +284,7 @@ class ScaleSpec extends SparkSpec {
     // must move only band keys + id pairs: a few dozen compact records
     // (~= true near-dup candidates), each well under a text body.
     val (rows, bytes, records) =
-      graft.ShuffleAudit.audit(spark, "/root/testdata/sf0.001",
+      graft.Tool.audit(spark, "/root/testdata/sf0.001",
         "x_dedup_minhash")
     assert(rows > 0)
     assert(records > 0 && records <= 4 * rows + 16,
@@ -301,7 +301,7 @@ class ScaleSpec extends SparkSpec {
     // stage. Avg text ~306 bytes at sf0.001: a leak would show up as
     // hundreds of bytes per shuffle record.
     val (rows, bytes, records) =
-      graft.ShuffleAudit.audit(spark, "/root/testdata/sf0.001",
+      graft.Tool.audit(spark, "/root/testdata/sf0.001",
         "x_text_winnow_pairs")
     assert(rows > 0)
     assert(records > 0)
@@ -315,7 +315,7 @@ class ScaleSpec extends SparkSpec {
     // radius: the naive cross product is 2 500 rows. The bounded heap
     // must reduce that to ~one record per query group before the exchange.
     val (rows, bytes, records) =
-      graft.ShuffleAudit.audit(spark, "/root/testdata/sf0.001", "x_knn_join")
+      graft.Tool.audit(spark, "/root/testdata/sf0.001", "x_knn_join")
     assert(rows == 250, s"50 queries x k=5 expected, got $rows")
     assert(records > 0 && records <= 120,
       s"per-query heaps expected (~51), got $records shuffle records")
@@ -1039,6 +1039,20 @@ class ScaleSpec extends SparkSpec {
       pack.take(800))
   }
 
+  /** `df`'s AQE-final plan text. Executes `df` itself, as the DPP test
+    * does: a `write` runs a separate QueryExecution and leaves this one's
+    * plan initial. Asserts the adaptive plan is final before reading it.
+    */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        assert(a.isFinalPlan, "AQE plan is not final after execution")
+        a.toString
+      case p => fail(s"expected an adaptive plan, got ${p.nodeName}")
+    }
+  }
+
   test("triangle gate truncates the fixture subtree: zero in-plan scans") {
     // round-14 pin: the folded fixture edge list is localCheckpointed in
     // triangleGate and the 3 triangle corners are emitted by ONE explode
@@ -1049,14 +1063,13 @@ class ScaleSpec extends SparkSpec {
     // artifact; a missing Generate means the corner union came back. The
     // one legitimate Union left is the degree computation's two-sided
     // read of the pinned edge list — cheap, over checkpointed blocks.
-    // execute BEFORE asserting: under AQE, executedPlan.toString on an
-    // unexecuted frame renders the INITIAL plan (isFinalPlan=false) and
-    // the join-strategy verdict could differ from the finalized runtime
-    // plan the committed plans/ artifacts were captured from
+    // read the AQE-final plan (finalPlan): an unexecuted frame renders
+    // the INITIAL plan, whose join-strategy verdict could differ from the
+    // finalized runtime plan the committed plans/ artifacts were captured
+    // from
     val df = graft.ext.graph.GraphOps
       .triangleGate(spark, "/root/testdata/sf0.001")
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = finalPlan(df)
     assert(!plan.contains("Scan parquet"), plan.take(800))
     assert(plan.contains("Generate"), plan.take(800))
     assert(!plan.contains("SortMergeJoin"), plan.take(800))
@@ -1069,12 +1082,10 @@ class ScaleSpec extends SparkSpec {
     // re-inlined per downstream reference (246-operator plan, 32
     // SortMergeJoins); the operator's own scaladoc promises ONE corpus
     // scan, and this asserts the plan actually honors it.
-    // executed first so the assertion reads the AQE-final plan (see the
-    // triangle pin above)
+    // asserts on the AQE-final plan (see the triangle pin above)
     val df = graft.ext.corpus.Corpus
       .pipelineReport(spark, "/root/testdata/sf0.001")
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = finalPlan(df)
     assert(!plan.contains("Scan parquet"), plan.take(800))
     assert(!plan.contains("SortMergeJoin"), plan.take(800))
   }
@@ -1090,8 +1101,7 @@ class ScaleSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     for (df <- Seq(graft.ext.text.TextAnalysis.bm25Report(spark, dir),
         graft.ext.text.TextAnalysis.passageTopK(spark, dir))) {
-      df.write.format("noop").mode("overwrite").save()
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = finalPlan(df)
       assert(!plan.contains("Scan parquet"), plan.take(800))
     }
   }

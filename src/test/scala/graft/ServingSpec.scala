@@ -63,6 +63,41 @@ class HttpShimSpec extends SparkSpec {
     } finally shim.stop()
   }
 
+  test("scans of a live latest table serve readings committed after the first") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.schema.{WeatherReading, WeatherStatus}
+    import graft.streaming.WeatherPipeline
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+
+    def reading(station: Long, sNo: Long) = WeatherStatus(station, sNo,
+      "high", new java.sql.Timestamp(sNo * 1000L), WeatherReading(50, 20, 5))
+    val input = MemoryStream[WeatherStatus]
+    val q = WeatherPipeline.startLatest(input.toDF(), "latest_fresh_scan")
+    val api = new QueryApi(spark,
+      WeatherPipeline.latestSnapshot(spark, "latest_fresh_scan"),
+      "latest_fresh_scan_view")
+    val shim = new HttpShim(api)
+    val port = shim.start()
+    def station1(rows: Array[org.apache.spark.sql.Row]): Long =
+      rows.find(_.getAs[Long]("station_id") == 1L).get.getAs[Long]("s_no")
+    try {
+      input.addData(reading(1L, 1L), reading(2L, 1L))
+      q.processAllAvailable()
+      assert(station1(api.scan().collect()) == 1L)
+      assert(get(s"http://localhost:$port/stations")._2
+        .contains("\"station_id\":1,\"s_no\":1,"))
+
+      input.addData(reading(1L, 2L))
+      q.processAllAvailable()
+      assert(station1(api.scan().collect()) == 2L,
+        "a scan after a commit must serve the newer reading")
+      val (code, body) = get(s"http://localhost:$port/stations")
+      assert(code == 200 && body.contains("\"station_id\":1,\"s_no\":2,"),
+        body)
+    } finally { shim.stop(); q.stop() }
+  }
+
   test("shim serves concurrent clients: pooled dispatch, consistent payloads") {
     val archive = Normalize.toArchive(
       StationSource.messages(spark, nStations = 4, perStation = 20))

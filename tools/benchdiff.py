@@ -100,7 +100,7 @@ def main():
         print(f"  {q}: {old[q]} -> {new[q]}  ({r:.2f}x){a}")
     if real == 0 and any(annot(q) for _, q in regressions):
         print("every riser's window was contaminated (per-gate steal > "
-              f"{STEAL_DIRTY}%) — adjudicate with a quiet solo TimeOne, "
+              f"{STEAL_DIRTY}%) — adjudicate with a quiet solo `Tool probe`, "
               "not a judge session")
     sys.exit(1)
 

@@ -3,7 +3,8 @@
 
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir>
 
-Reads each <name>/ parquet result written by graft.Verify, runs the matching
+Reads each <name>/ parquet result written by `graft.Tool verify` (every
+gate, or only the gates named on its command line), runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the sf parquet tables, and
 compares row count, column names, and a row-order-insensitive value hash
 (columns sorted by name, values stringified, rows sorted).

@@ -6,7 +6,7 @@ The driver's correctness gate hashes typed values; the local check.py
 stringifies them first. So a gate whose oracle yields DuckDB HUGEINT
 (e.g. a bare sum(BIGINT)) against a Spark BIGINT column passes locally
 and fails remotely. This tool closes that blind spot: for every gate in
-a Verify dump it compares the Spark result's parquet schema against the
+a `Tool verify` dump it compares the Spark result's parquet schema against the
 DuckDB type of `DESCRIBE <oracle sql>` and fails on any column whose
 types are not the agreed pairing.
 
