@@ -55,8 +55,8 @@ object LatestState {
       }
 
   /** Streaming: groupByKey(station).mapGroupsWithState keeping the event-time
-    * max. Output mode must be Update; pair with a memory/foreachBatch sink to
-    * serve point lookups (A3/A4).
+    * max. Output mode must be Update; `WeatherPipeline.startLatest` pairs it
+    * with a foreachBatch keydir writer to serve point lookups (A3/A4).
     */
   def latestStream(archive: DataFrame): Dataset[WeatherStatus] = {
     implicit val enc = Encoders.product[WeatherStatus]
@@ -64,10 +64,6 @@ object LatestState {
     latestStreamBy(archive.as[WeatherStatus])(_.station_id)(s =>
       (s.status_timestamp.getTime, s.s_no))
   }
-
-  /** A3 — point lookup against a latest table. */
-  def point(latestTable: DataFrame, stationId: Long): DataFrame =
-    latestTable.filter(col("station_id") === stationId)
 
   /** Generic streaming ARRIVAL-order latest-per-key — faithful BitCask
     * semantics: the last row to arrive wins, even if its event time is

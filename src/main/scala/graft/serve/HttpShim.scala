@@ -13,9 +13,9 @@ import graft.util.Json
   *   GET /station?id=<K>    → one row; 400 missing param, 404 unknown key
   * CORS `*` like the reference (ref: CentralStationServer.java:26-29).
   *
-  * Serving-path note: the handler queries the Spark latest-table per request
-  * (collect of O(stations) rows). For high QPS you'd snapshot to a local map
-  * per refresh — the HTTP layer is a shim, not the engine.
+  * Serving path: both routes read [[QueryApi]]'s keydir, the map the
+  * latest fork publishes per micro-batch — a point get is one lookup and
+  * a scan renders one published version, so no request runs a Spark job.
   */
 class HttpShim(api: QueryApi, port: Int = 0) {
 
@@ -34,10 +34,9 @@ class HttpShim(api: QueryApi, port: Int = 0) {
   // Without an explicit executor the JDK server dispatches every exchange on
   // its single accept thread, serializing clients; the reference's Javalin
   // server is pooled (ref: CentralStationServer.java:23 — Jetty QTP, max
-  // 200), so concurrent clients are part of the contract. BOUNDED like QTP:
-  // every exchange runs a driver-side collect, so an unbounded pool would
-  // let a connection burst flood the scheduler. Daemon threads: the shim
-  // must never pin a driver JVM open.
+  // 200), so concurrent clients are part of the contract. BOUNDED like QTP,
+  // so a connection burst cannot start unbounded threads. Daemon threads:
+  // the shim must never pin a driver JVM open.
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(200,
     new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger()
@@ -60,10 +59,9 @@ class HttpShim(api: QueryApi, port: Int = 0) {
   /** Route guard shared by both contexts. JDK context matching is
     * PREFIX-based, so /stationsXYZ and /station/5 land here too — they
     * must 404 like the reference's exact Javalin routes. Non-GET methods
-    * 405 (every handler runs a driver-side collect; a CORS preflight must
-    * not do real work). A handler exception becomes a 500 — the bare JDK
-    * server would otherwise close the connection with NO response, where
-    * the reference returns 500.
+    * 405 (a CORS preflight must not do real work). A handler exception
+    * becomes a 500 — the bare JDK server would otherwise close the
+    * connection with NO response, where the reference returns 500.
     */
   private def guarded(exactPath: String)(f: HttpExchange => Unit): HttpHandler =
     new HttpHandler {
@@ -86,7 +84,7 @@ class HttpShim(api: QueryApi, port: Int = 0) {
 
   server.createContext("/stations", guarded("/stations") { ex =>
     respond(ex, 200,
-      api.scan().collect().map(rowJson).mkString("[", ",", "]"))
+      api.rows().map(rowJson).mkString("[", ",", "]"))
   })
 
   server.createContext("/station", guarded("/station") { ex =>

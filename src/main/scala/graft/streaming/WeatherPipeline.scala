@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.core.{Alerts, LatestState, Normalize}
 import graft.lake.Archive
+import graft.serve.Keydir
+import graft.util.Scratch
 
 /** The reference's full topology (SURVEY §3.1) as Structured Streaming:
   *
   *   source (kafka | generated | files) → parse → normalize →
-  *     fork: (a) latest-per-station state  → in-memory serving table
+  *     fork: (a) latest-per-station state  → in-memory keydir (serving)
   *           (b) partitioned parquet lake  → checkpointed file sink
   *           (c) humidity alerts           → alert sink (kafka | memory)
   *
@@ -86,28 +88,34 @@ object WeatherPipeline {
   def normalize(wireJson: DataFrame): DataFrame =
     Normalize.toArchive(Normalize.parseWire(wireJson))
 
-  /** Fork (a): latest-value state, served from an in-memory table named
-    * `tableName` (the BitCask + Javalin replacement). Read it through
-    * [[latestSnapshot]], NOT `spark.table(tableName)` directly: an
-    * Update-mode memory sink APPENDS one row per key per micro-batch, so
-    * the raw table is a version history and a naive point lookup can
-    * return a stale reading.
+  /** Fork (a): latest-value state, served from an in-memory keydir (the
+    * BitCask + Javalin replacement). A `foreachBatch` writer merges each
+    * micro-batch's rows — at most one per updated station, already the
+    * event-time winner of `mapGroupsWithState` — into a [[Keydir]] and
+    * publishes it before the batch commits. The keydir is registered as
+    * the temp view `tableName`, one row per station, so `spark.table`
+    * and [[latestSnapshot]] read the same table. The checkpoint is a
+    * fresh scratch directory per start.
     */
-  def startLatest(archive: DataFrame, tableName: String): StreamingQuery =
-    LatestState.latestStream(archive)
-      .writeStream
+  def startLatest(archive: DataFrame, tableName: String): StreamingQuery = {
+    val latest = LatestState.latestStream(archive).toDF()
+    val keydir = new Keydir(tableName, latest.schema)
+    keydir.frame(archive.sparkSession).createOrReplaceTempView(tableName)
+    latest.writeStream
       .outputMode(OutputMode.Update)
-      .format("memory")
+      .foreachBatch(keydir.write _)
+      .option("checkpointLocation", Scratch.dir("graft_latest_ck").toString)
       .queryName(tableName)
       .start()
+  }
 
-  /** The CURRENT latest table from [[startLatest]]'s memory sink: collapse
-    * the sink's per-batch update history to each station's event-time
-    * winner (cost ∝ rows appended since the query started — the serving
-    * layer's QueryApi/HttpShim should be handed THIS frame).
+  /** The CURRENT latest table of [[startLatest]]: the keydir behind the
+    * view `tableName`. Each query planned over it is a driver-local scan
+    * of the map published last, with no job and no aggregate; hand it to
+    * [[graft.serve.QueryApi]] to serve point gets and scans from the map.
     */
   def latestSnapshot(spark: SparkSession, tableName: String): DataFrame =
-    LatestState.latest(spark.table(tableName))
+    spark.table(tableName)
 
   /** Fork (b): the partitioned lake. */
   def startArchive(archive: DataFrame, path: String, checkpoint: String,

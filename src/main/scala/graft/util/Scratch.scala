@@ -2,12 +2,15 @@ package graft.util
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+
 /** Process-lifetime scratch directories: created under the scratch root
-  * and recursively deleted by a shutdown hook. Gate queries that stage
-  * files (streaming sources, export round-trips, checkpoints) return lazy
-  * DataFrames still reading from these paths, so deletion must wait for
-  * JVM exit — without the hook every `Tool verify`/Bench sweep strands staged
-  * copies of the input tables in the scratch filesystem.
+  * and recursively deleted at JVM exit, after the SparkContext stops.
+  * Gate queries that stage files (streaming sources, export round-trips,
+  * checkpoints) return lazy DataFrames still reading from these paths, so
+  * deletion must wait for JVM exit — without the hook every `Tool
+  * verify`/Bench sweep strands staged copies of the input tables in the
+  * scratch filesystem.
   *
   * Root selection (spark_optimization_guide §6 — I/O layout): everything
   * written here is ephemeral per-process data (micro-batch checkpoints of
@@ -76,11 +79,22 @@ object Scratch {
 
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
+  // Teardown runs in Spark's ordered shutdown sequence: a raw Runtime hook
+  // runs concurrently with Spark's and could delete a checkpoint under a
+  // state store that is still open. First, while the SparkContext is up,
+  // stop the default session's streaming queries and close the state
+  // stores; then, after the SparkContext has stopped, delete the roots.
+  GraftBridge.addShutdownHook(GraftBridge.SparkContextShutdownPriority + 1) { () =>
+    SparkSession.getDefaultSession.foreach(_.streams.active.foreach { q =>
+      try q.stop() catch { case _: Throwable => () }
+    })
+    try GraftBridge.closeStateStores() catch { case _: Throwable => () }
+  }
+  GraftBridge.addShutdownHook(GraftBridge.TempDirShutdownPriority) { () =>
     created.forEach { p =>
       try deleteTree(p) catch { case _: Throwable => () }
     }
-  }))
+  }
 
   /** A fresh scratch directory, deleted (recursively) at JVM exit. */
   def dir(prefix: String): Path =

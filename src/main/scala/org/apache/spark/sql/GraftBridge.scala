@@ -19,4 +19,24 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Run `hook` at JVM exit in Spark's ordered shutdown sequence
+    * (`ShutdownHookManager` is `private[spark]`): hooks run one at a time,
+    * higher `priority` first, and the SparkContext stops at
+    * [[SparkContextShutdownPriority]]. A raw `Runtime` hook instead runs
+    * concurrently with all of Spark's.
+    */
+  def addShutdownHook(priority: Int)(hook: () => Unit): Unit =
+    org.apache.spark.util.ShutdownHookManager.addShutdownHook(priority)(hook)
+
+  val SparkContextShutdownPriority: Int =
+    org.apache.spark.util.ShutdownHookManager.SPARK_CONTEXT_SHUTDOWN_PRIORITY
+  val TempDirShutdownPriority: Int =
+    org.apache.spark.util.ShutdownHookManager.TEMP_DIR_SHUTDOWN_PRIORITY
+
+  /** Close every state-store provider loaded in this JVM (RocksDB
+    * instances included) and stop their maintenance thread.
+    */
+  def closeStateStores(): Unit =
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 }

@@ -122,7 +122,7 @@ class PipelineSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
       val got = spark.table("latest_e2e")
-        .groupBy("station_id").agg(max("s_no").as("s_no"))   // Update-mode sink appends; take last
+        .groupBy("station_id").agg(max("s_no").as("s_no"))   // one row per station already
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == expectLatest)
 

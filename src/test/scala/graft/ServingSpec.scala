@@ -6,7 +6,7 @@ import graft.core.{LatestState, Normalize}
 import graft.gen.{OpenMeteoAdapter, StationSource}
 import graft.serve.{HttpShim, QueryApi}
 
-class HttpShimSpec extends SparkSpec {
+object HttpShimSpec {
 
   def get(url: String): (Int, String) = {
     val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
@@ -20,6 +20,10 @@ class HttpShimSpec extends SparkSpec {
       else try scala.io.Source.fromInputStream(is).mkString finally is.close()
     (code, body)
   }
+}
+
+class HttpShimSpec extends SparkSpec {
+  import HttpShimSpec.get
 
   test("HTTP routes mirror the reference server: 200/400/404 + CORS") {
     val archive = Normalize.toArchive(
@@ -122,6 +126,145 @@ class HttpShimSpec extends SparkSpec {
       assert(runs.map(_._2).distinct.size == 1,
         "all concurrent scans must see the same latest-state payload")
       assert(runs.head._2.split("\"station_id\"").length - 1 == 4)
+    } finally shim.stop()
+  }
+}
+
+class KeydirSpec extends SparkSpec {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.execution.LocalTableScanExec
+  import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+  import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  import graft.schema.{WeatherReading, WeatherStatus}
+  import graft.serve.Keydir
+  import graft.streaming.WeatherPipeline
+
+  /** Station `station`'s reading number `sNo`, at `sNo` seconds unless
+    * `tsMs` says otherwise; its humidity is `10 + sNo`, so a row that mixed
+    * two readings would show.
+    */
+  def reading(station: Long, sNo: Long, tsMs: Long = -1L) = WeatherStatus(
+    station, sNo, "high", new java.sql.Timestamp(if (tsMs < 0) sNo * 1000L else tsMs),
+    WeatherReading(10 + sNo.toInt, 20, 5))
+
+  test("the served table holds one row per station as batches accumulate") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[WeatherStatus]
+    val q = WeatherPipeline.startLatest(input.toDF(), "keydir_bounded")
+    try {
+      val served = WeatherPipeline.latestSnapshot(spark, "keydir_bounded")
+      val keydir = Keydir.of(served).get
+      (1L to 20L).foreach { b =>
+        input.addData((1L to 3L).map(reading(_, b)): _*)
+        q.processAllAvailable()
+        // the view is the keydir itself, not a per-batch update history
+        assert(spark.table("keydir_bounded").collect().length == 3)
+        assert(keydir.version.rows.size == 3)
+        assert(keydir.version.batchId == q.lastProgress.batchId)
+      }
+      val rows = WeatherPipeline.latestSnapshot(spark, "keydir_bounded").collect()
+      assert(rows.map(_.getAs[Long]("s_no")).toSeq == Seq(20L, 20L, 20L))
+      assert(rows.map(_.getAs[Long]("station_id")).sorted.toSeq == Seq(1L, 2L, 3L))
+      val plan = WeatherPipeline.latestSnapshot(spark, "keydir_bounded")
+        .queryExecution.executedPlan
+      assert(plan.isInstanceOf[LocalTableScanExec] &&
+        plan.collect { case a: BaseAggregateExec => a }.isEmpty, plan)
+      assert(q.lastProgress.sink.description.contains("ForeachBatchSink"),
+        q.lastProgress.sink.description)
+    } finally q.stop()
+  }
+
+  test("a late reading never replaces the served row") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[WeatherStatus]
+    val q = WeatherPipeline.startLatest(input.toDF(), "keydir_late")
+    val api = new QueryApi(spark, WeatherPipeline.latestSnapshot(spark, "keydir_late"),
+      "keydir_late_view")
+    try {
+      input.addData(reading(1L, 5L), reading(2L, 1L))
+      q.processAllAvailable()
+      // arrives later with a higher s_no, but an older status_timestamp
+      input.addData(reading(1L, 9L, tsMs = 1000L))
+      q.processAllAvailable()
+      assert(api.point(1L).map(_.getAs[Long]("s_no")).contains(5L))
+      assert(api.scan().collect().find(_.getAs[Long]("station_id") == 1L).get
+        .getAs[Long]("s_no") == 5L)
+      assert(api.sql("SELECT s_no FROM keydir_late_view WHERE station_id = 1")
+        .collect().map(_.getLong(0)).toSeq == Seq(5L))
+    } finally q.stop()
+  }
+
+  test("publishing the same batch twice leaves the map unchanged") {
+    import spark.implicits._
+    val first = Seq(reading(1L, 1L), reading(2L, 1L)).toDF()
+    val second = Seq(reading(1L, 2L)).toDF()
+    val keydir = new Keydir("keydir_replay", first.schema)
+    keydir.write(first, 0L)
+    val v0 = keydir.version
+    keydir.write(first, 0L)
+    assert(keydir.version == v0)
+    keydir.write(second, 1L)
+    val v1 = keydir.version
+    keydir.write(second, 1L)
+    assert(keydir.version == v1 && v1 != v0)
+    assert(v1.rows(1L).getAs[Long]("s_no") == 2L && v1.rows(2L).getAs[Long]("s_no") == 1L)
+  }
+
+  test("under a publisher, scans show one version and point gets a published row") {
+    import spark.implicits._
+    val stations = 1L to 4L
+    val versions = 30
+    val all = (0 until versions).flatMap(v => stations.map(reading(_, v.toLong))).toDF()
+    val byVersion = all.collect().groupBy(_.getAs[Long]("s_no"))
+    val keydir = new Keydir("keydir_live", all.schema)
+    keydir.publish(0L, byVersion(0L))
+    val api = new QueryApi(spark, keydir.frame(spark), "keydir_live_view")
+    val shim = new HttpShim(api)
+    val port = shim.start()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val publisher = new Thread(() => {
+      (1 until versions).foreach { v =>
+        keydir.publish(v.toLong, byVersion(v.toLong)); Thread.sleep(3)
+      }
+      done.set(true)
+    })
+    val Reading = """"station_id":(\d+),"s_no":(\d+),.*?"humidity":(\d+)""".r
+    def parsed(body: String): Seq[(Long, Long, Int)] =
+      Reading.findAllMatchIn(body).map(m =>
+        (m.group(1).toLong, m.group(2).toLong, m.group(3).toInt)).toSeq
+    try {
+      publisher.start()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      val futures = (0 until 3).map { c =>
+        pool.submit(new java.util.concurrent.Callable[(Seq[String], Seq[String])] {
+          override def call(): (Seq[String], Seq[String]) = {
+            val scans = Seq.newBuilder[String]; val points = Seq.newBuilder[String]
+            while (!done.get()) {
+              val (c1, s1) = HttpShimSpec.get(s"http://localhost:$port/stations")
+              assert(c1 == 200); scans += s1
+              val (c2, p1) = HttpShimSpec.get(s"http://localhost:$port/station?id=${1 + c}")
+              assert(c2 == 200); points += p1
+            }
+            (scans.result(), points.result())
+          }
+        })
+      }
+      pool.shutdown()
+      val results = futures.map(_.get())
+      publisher.join()
+      val scans = results.flatMap(_._1); val points = results.flatMap(_._2)
+      assert(scans.nonEmpty && points.nonEmpty)
+      scans.foreach { body =>
+        val rows = parsed(body)
+        assert(rows.map(_._1).sorted == stations, body)
+        assert(rows.map(_._2).distinct.size == 1, s"a scan mixed versions: $body")
+      }
+      (scans ++ points).flatMap(parsed).foreach { case (_, sNo, humidity) =>
+        assert(sNo >= 0 && sNo < versions && humidity == 10 + sNo, (sNo, humidity))
+      }
+      assert(points.forall(b => parsed(b).size == 1), points)
     } finally shim.stop()
   }
 }
