@@ -17,9 +17,12 @@ import graft.schema.{WeatherReading, WeatherStatus}
   * with small key cardinality this is the difference between seconds and
   * hours.
   *
-  * Streaming: `mapGroupsWithState` with one WeatherStatus per key — state size
-  * is O(stations), bounded; NoTimeout because the latest table is meant to
-  * live forever (the reference never expires keys).
+  * Streaming: the served `latest` fork (`WeatherPipeline.startLatest`) runs
+  * the batch `max_by` per micro-batch and merges the winners into its
+  * keydir, with no state store. The `mapGroupsWithState` forms below keep
+  * one WeatherStatus per key in a state store — O(stations), bounded;
+  * NoTimeout because the latest table is meant to live forever (the
+  * reference never expires keys) — for the streaming gates that run them.
   */
 object LatestState {
 
@@ -55,8 +58,7 @@ object LatestState {
       }
 
   /** Streaming: groupByKey(station).mapGroupsWithState keeping the event-time
-    * max. Output mode must be Update; `WeatherPipeline.startLatest` pairs it
-    * with a foreachBatch keydir writer to serve point lookups (A3/A4).
+    * max. Output mode must be Update.
     */
   def latestStream(archive: DataFrame): Dataset[WeatherStatus] = {
     implicit val enc = Encoders.product[WeatherStatus]

@@ -11,14 +11,16 @@ import graft.schema.WeatherSchema
   * Layout matches the reference: hive-style `date=/hour=/station_id=` dirs,
   * snappy parquet (ref: ParquetArchiver.java:107-143). Spark's dynamic
   * partition write does the reference's hand-rolled groupBy-then-write
-  * (ParquetArchiver.java:96-120) shuffle-free, and partition discovery on
-  * read gives pruning for free.
+  * (ParquetArchiver.java:96-120), and partition discovery on read gives
+  * pruning for free.
   *
-  * Scale notes: the reference writes one file per (≤1000-row batch ×
-  * partition) — a small-files bomb at 100 TB. We keep layout parity but
-  * expose `maxRecordsPerFile`; at real scale you'd also bucket or
-  * repartition(partitionCols) before write to get one file per partition per
-  * batch.
+  * Small files: the reference writes one file per (≤1000-row flush ×
+  * partition) (ref: ParquetArchiver.java:34). The streaming write
+  * hash-repartitions each micro-batch on the partition columns before the
+  * file sink, so a batch writes one file per partition directory however
+  * many input partitions it read; the batch [[write]] keeps its input's
+  * partitioning (one file per input partition × directory) and exposes
+  * `maxRecordsPerFile`, and [[compact]] collapses either afterwards.
   */
 object Archive {
 
@@ -37,11 +39,19 @@ object Archive {
 
   /** Streaming write: same layout with checkpointed exactly-once file sink
     * (strictly better than the reference's volatile queue,
-    * ref: ParquetArchiver.java:36 loss window; SURVEY §2.6).
+    * ref: ParquetArchiver.java:36 loss window; SURVEY §2.6). Each batch is
+    * hash-repartitioned on [[PartitionCols]] into the session's
+    * `spark.sql.shuffle.partitions`, so every partition directory's rows
+    * land in one task and the batch writes one file per directory. The
+    * explicit count matters: without one, adaptive execution coalesces a
+    * small batch's shuffle into a single task that writes every file in
+    * turn.
     */
   def writeStream(archive: DataFrame, path: String, checkpoint: String,
-      triggerMs: Long = 10000L): DataStreamWriter[Row] =
-    Normalize.withPartitionKeys(archive)
+      triggerMs: Long = 10000L): DataStreamWriter[Row] = {
+    val keyed = Normalize.withPartitionKeys(archive)
+    val n = archive.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    keyed.repartition(n, PartitionCols.map(keyed.col): _*)
       .writeStream
       .format("parquet")
       .option("path", path)
@@ -49,6 +59,7 @@ object Archive {
       .option("compression", "snappy")
       .partitionBy(PartitionCols: _*)
       .trigger(Trigger.ProcessingTime(triggerMs))
+  }
 
   /** Batch read with partition discovery (S7). Filters on date/hour/station_id
     * prune directories before any IO.

@@ -197,7 +197,11 @@ object EventOps {
     // only for the long-lived serving deployment); spark.sql analyzes
     // eagerly, so the returned frame survives the drop
     val view = "latest_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val api = new graft.serve.QueryApi(spark, latestPerKey(spark, dir), view)
+    // a served latest table orders a station's rows by
+    // (status_timestamp, s_no); `ts` is this table's event time, rendered
+    // fixed-width so it orders as text
+    val latest = latestPerKey(spark, dir).withColumnRenamed("ts", "status_timestamp")
+    val api = new graft.serve.QueryApi(spark, latest, view)
     try api.sql(s"SELECT station_id, s_no, event_type, value FROM $view")
     finally spark.catalog.dropTempView(view)
   }

@@ -15,7 +15,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The served latest table: an immutable `station_id → row` map,
   * published whole through one `AtomicReference` (the BitCask keydir,
-  * ref: BitCask.java:119-180).
+  * ref: BitCask.java:119-180). It is the latest fork's only state: each
+  * micro-batch's per-station winners merge into it by event time
+  * ([[publish]]), and no state store keeps a second copy. The schema must
+  * hold `station_id` (the key) and `status_timestamp` and `s_no` (the
+  * order).
   *
   * One writer publishes; any number of readers take the current
   * [[Keydir.Version]] and never see a half-applied batch. Point gets are a
@@ -28,24 +32,41 @@ final class Keydir(val name: String, val schema: StructType) {
   import Keydir.Version
 
   private val keyIndex = schema.fieldIndex("station_id")
+  private val tsIndex = schema.fieldIndex("status_timestamp")
+  private val sNoIndex = schema.fieldIndex("s_no")
   private val current = new AtomicReference(Version(-1L, Map.empty, schema))
 
   def version: Version = current.get
 
   def get(stationId: Long): Option[Row] = current.get.rows.get(stationId)
 
-  /** Merge `rows` over the current map (a row replaces its station's) and
-    * publish the result as batch `batchId`. Rows with a null station id
-    * are dropped. Merging the same rows again publishes an equal map, so a
-    * re-executed batch leaves readers where they were.
+  /** Merge `rows` over the current map and publish the result as batch
+    * `batchId`. A row replaces its station's row only when its
+    * `(status_timestamp, s_no)` is strictly greater: a late reading never
+    * wins, a tie keeps the served row, and merging rows already merged
+    * (a re-executed batch) leaves the current version in place. Rows with
+    * a null station id are dropped.
     */
   def publish(batchId: Long, rows: Iterable[Row]): Unit =
     current.updateAndGet { v =>
-      Version(math.max(v.batchId, batchId), v.rows ++ rows.collect {
-        case r if !r.isNullAt(keyIndex) =>
-          r.get(keyIndex).asInstanceOf[Number].longValue -> r
-      }, schema)
+      val merged = rows.foldLeft(v.rows) { (m, r) =>
+        if (r.isNullAt(keyIndex)) m
+        else {
+          val k = r.get(keyIndex).asInstanceOf[Number].longValue
+          if (m.get(k).forall(newer(r, _))) m.updated(k, r) else m
+        }
+      }
+      val id = math.max(v.batchId, batchId)
+      if ((merged eq v.rows) && id == v.batchId) v else Version(id, merged, schema)
     }
+
+  /** Whether `a` orders strictly after `b` on `(status_timestamp, s_no)`,
+    * nulls first, as the batch `max_by` orders them.
+    */
+  private def newer(a: Row, b: Row): Boolean = {
+    val ts = Keydir.compare(a.get(tsIndex), b.get(tsIndex))
+    ts > 0 || (ts == 0 && Keydir.compare(a.get(sNoIndex), b.get(sNoIndex)) > 0)
+  }
 
   /** The `foreachBatch` writer: collect one micro-batch and publish it. It
     * runs inside the sink's `addBatch`, before the batch's commit-log
@@ -91,13 +112,21 @@ object Keydir {
     }
   }
 
-  /** A keydir holding `df`'s rows, collected once: one row per station is
-    * expected, and of duplicates the last collected wins.
+  /** A keydir holding `df`'s rows, collected once and merged by the
+    * [[Keydir.publish]] rule: of a station's rows, the greatest
+    * `(status_timestamp, s_no)` is served.
     */
   def collect(df: DataFrame, name: String): Keydir = {
     val k = new Keydir(name, df.schema)
     k.publish(0L, df.collect())
     k
+  }
+
+  private def compare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Comparable[Any @unchecked], y) => x.compareTo(y)
   }
 
   private final class KeydirTable(val keydir: Keydir) extends Table with SupportsRead {

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *     so each call sees the batch published last;
   *   - any other frame (a batch latest table) is collected once, here at
   *     construction, into a keydir of its own, and never re-planned.
-  * The keydir is registered as the temp view `viewName` for [[sql]].
+  * Either way the table needs `station_id`, `status_timestamp` and `s_no`
+  * columns ([[Keydir]]). The keydir is registered as the temp view
+  * `viewName` for [[sql]].
   */
 class QueryApi(spark: SparkSession, latestTable: DataFrame,
     viewName: String = "latest") {

@@ -1,18 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import graft.core.{Alerts, LatestState, Normalize}
 import graft.lake.Archive
+import graft.schema.WeatherStatus
 import graft.serve.Keydir
 import graft.util.Scratch
 
 /** The reference's full topology (SURVEY §3.1) as Structured Streaming:
   *
   *   source (kafka | generated | files) → parse → normalize →
-  *     fork: (a) latest-per-station state  → in-memory keydir (serving)
-  *           (b) partitioned parquet lake  → checkpointed file sink
-  *           (c) humidity alerts           → alert sink (kafka | memory)
+  *     fork: (a) latest-per-station batch max_by → in-memory keydir (serving)
+  *           (b) partitioned parquet lake → checkpointed file sink,
+  *               one file per partition directory per batch
+  *           (c) humidity alerts → alert sink (kafka | memory)
   *
   * Forks run as independent queries over the same declarative source frame —
   * Spark's equivalent of the reference's thread handoffs
@@ -21,13 +23,17 @@ import graft.util.Scratch
   * reference's separate processes, but with exactly-once file-sink semantics
   * instead of the volatile queue (ParquetArchiver.java:36).
   *
-  * Deployments should install a [[StateGuard]] on the session (`new
-  * StateGuard(spark, cap).install()`) sized to the provisioned state
-  * stores: the stateful fork (a) keys on station_id, so a misbehaving
-  * source that fabricates unbounded keys — or collapses event times on
-  * any watermarked derivative — grows state without bound, and the guard
-  * turns that into an immediate attributable failure instead of a
-  * delayed OOM (see SCALE.md, "Streaming state circuit breaker").
+  * None of the three forks keeps a state store: fork (a)'s state is its
+  * keydir, one in-memory row per station id, and (b) and (c) are
+  * stateless. A [[StateGuard]] (`new StateGuard(spark, cap).install()`)
+  * belongs to the stateful queries built beside them — the
+  * `LatestState.latestStream*` state stores, windowed and
+  * watermark-evicted derivatives — whose state a source that fabricates
+  * unbounded keys or collapses event times grows without bound; the
+  * guard turns that into an immediate attributable failure instead of a
+  * delayed OOM (see SCALE.md, "Streaming state circuit breaker"). The
+  * keydir grows with distinct station ids the same way, in the heap of
+  * the process that runs the queries.
   */
 object WeatherPipeline {
 
@@ -89,21 +95,28 @@ object WeatherPipeline {
     Normalize.toArchive(Normalize.parseWire(wireJson))
 
   /** Fork (a): latest-value state, served from an in-memory keydir (the
-    * BitCask + Javalin replacement). A `foreachBatch` writer merges each
-    * micro-batch's rows — at most one per updated station, already the
-    * event-time winner of `mapGroupsWithState` — into a [[Keydir]] and
-    * publishes it before the batch commits. The keydir is registered as
-    * the temp view `tableName`, one row per station, so `spark.table`
-    * and [[latestSnapshot]] read the same table. The checkpoint is a
-    * fresh scratch directory per start.
+    * BitCask + Javalin replacement). The fork is stateless: a
+    * `foreachBatch` writer reduces each micro-batch to one row per station
+    * with the batch `max_by` ([[LatestState.latest]], partial-aggregated
+    * before its shuffle), collects it and merges it into a [[Keydir]],
+    * published before the batch commits. The keydir is the only copy of
+    * the latest state; its merge keeps the greater
+    * `(status_timestamp, s_no)`, so a late reading never wins and a
+    * replayed batch changes nothing. The keydir is registered as the temp
+    * view `tableName`, one row per station with [[WeatherStatus]]'s
+    * schema, so `spark.table` and [[latestSnapshot]] read the same table.
+    * The checkpoint is a fresh scratch directory per start.
     */
   def startLatest(archive: DataFrame, tableName: String): StreamingQuery = {
-    val latest = LatestState.latestStream(archive).toDF()
-    val keydir = new Keydir(tableName, latest.schema)
+    val status = Encoders.product[WeatherStatus]
+    val keydir = new Keydir(tableName, status.schema)
     keydir.frame(archive.sparkSession).createOrReplaceTempView(tableName)
-    latest.writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch(keydir.write _)
+    archive.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the typed round trip over the winners gives the rows the view's
+        // schema, non-null checks included
+        keydir.write(LatestState.latest(batch).as(status).map(identity)(status).toDF(), batchId)
+      }
       .option("checkpointLocation", Scratch.dir("graft_latest_ck").toString)
       .queryName(tableName)
       .start()

@@ -758,6 +758,34 @@ class CompactionSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == rowsBefore)
   }
 
+  test("a streaming lake batch writes one file per partition directory") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.schema.{WeatherReading, WeatherStatus}
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val dir = tmpDir("lake_stream") + "/lake"
+    // 3 stations × 2 hours × 4 readings, ordered by reading so each of the
+    // 4 input partitions holds a row of every (date, hour, station_id)
+    val rows = for (n <- 1 to 4; h <- 0 to 1; st <- 1L to 3L)
+      yield WeatherStatus(st, (h * 4 + n).toLong, "high",
+        new java.sql.Timestamp(h * 3600000L + n * 1000L), WeatherReading(40 + n, 20, 5))
+    val input = MemoryStream[WeatherStatus](4)
+    input.addData(rows: _*)
+    val q = Archive.writeStream(input.toDF(), dir, tmpDir("lake_stream_ck")).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    val leaves = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .groupBy(_.getParent)
+    assert(leaves.size == 6, leaves.keys)
+    assert(leaves.forall(_._2.size == 1), leaves.map { case (d, fs) => d -> fs.size })
+    val lake = Archive.read(spark, dir).select("station_id", "s_no", "battery_status",
+      "status_timestamp", "weather").as[WeatherStatus].collect()
+    assert(lake.sortBy(r => (r.station_id, r.s_no)).toSeq ==
+      rows.sortBy(r => (r.station_id, r.s_no)))
+  }
+
   test("compact on the ANN index layout: one file per bucket, same answers") {
     val dir = "/root/testdata/sf0.001"
     val indexPath = graft.util.Scratch.dir("graft_cmp_spec").toString

@@ -646,8 +646,7 @@ class PropertySpec extends SparkSpec {
   test("snapshot lifecycle: latest content survives random append/rewrite/vacuum") {
     import graft.lake.Snapshots
     for (round <- 0 until 2) {
-      val table = java.nio.file.Files
-        .createTempDirectory(s"snap_prop_$round").toString
+      val table = tmpDir(s"snap_prop_$round")
       val content = scala.collection.mutable.ArrayBuffer[(Long, String)]()
       var nextId = 0L
       val rnd = new scala.util.Random(4242 + round)

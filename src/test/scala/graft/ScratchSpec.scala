@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A JVM that exits with a RocksDB-backed `latest` fork still running, its
+/** A JVM that exits with a RocksDB-backed stateful query still running
+  * (`LatestState.latestStream` into a `foreachBatch` writer), its
   * checkpoint and state store under the scratch root. A shutdown hook
   * placed between the SparkContext stop and the scratch deletion writes
   * what it sees to the report file `args(0)`: whether the query is still
@@ -16,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object ScratchTeardownProbe {
   def main(args: Array[String]): Unit = {
+    import org.apache.spark.sql.Dataset
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
     import graft.schema.{WeatherReading, WeatherStatus}
     val report = Paths.get(args(0))
     val spark = SparkSession.builder()
@@ -29,7 +32,13 @@ object ScratchTeardownProbe {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[WeatherStatus]
-    val q = graft.streaming.WeatherPipeline.startLatest(input.toDF(), "teardown_latest")
+    val q = graft.core.LatestState.latestStream(input.toDF())
+      .writeStream
+      .outputMode(OutputMode.Update)
+      .foreachBatch { (batch: Dataset[WeatherStatus], _: Long) => batch.collect(); () }
+      .option("checkpointLocation", graft.util.Scratch.dir("teardown_ck").toString)
+      .queryName("teardown_latest")
+      .start()
     (1L to 3L).foreach { n =>
       input.addData(WeatherStatus(1L, n, "high", new java.sql.Timestamp(n * 1000L),
         WeatherReading(50, 20, 5)))

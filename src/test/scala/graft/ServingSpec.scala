@@ -212,6 +212,70 @@ class KeydirSpec extends SparkSpec {
     assert(v1.rows(1L).getAs[Long]("s_no") == 2L && v1.rows(2L).getAs[Long]("s_no") == 1L)
   }
 
+  test("an older reading after a newer one in the same micro-batch is not served") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    // two input partitions, so the two readings of station 1 meet only at
+    // the shuffle
+    val input = MemoryStream[WeatherStatus](2)
+    val q = WeatherPipeline.startLatest(input.toDF(), "keydir_same_batch")
+    try {
+      input.addData(reading(1L, 5L), reading(2L, 1L), reading(1L, 9L, tsMs = 1000L),
+        reading(2L, 2L))
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      val served = Keydir.of(WeatherPipeline.latestSnapshot(spark, "keydir_same_batch")).get
+      assert(served.get(1L).map(_.getAs[Long]("s_no")).contains(5L))
+      assert(served.get(2L).map(_.getAs[Long]("s_no")).contains(2L))
+      assert(served.get(1L).get.getAs[Row]("weather").getInt(0) == 15)
+    } finally q.stop()
+  }
+
+  test("replaying a batch or publishing an older or tied row leaves the map equal") {
+    import spark.implicits._
+    val rows = Seq(reading(1L, 5L), reading(2L, 3L)).toDF().collect()
+    val keydir = new Keydir("keydir_merge", rows.head.schema)
+    keydir.publish(0L, rows)
+    val v0 = keydir.version
+    keydir.publish(0L, rows)
+    assert(keydir.version eq v0, "a replayed batch must keep the published version")
+    // older event time with a higher s_no; same event time with a lower
+    // s_no; the same (status_timestamp, s_no) with other values
+    val tied = reading(2L, 3L).copy(weather = WeatherReading(99, 99, 99))
+    keydir.publish(1L, Seq(reading(1L, 9L, tsMs = 1000L), reading(1L, 4L, tsMs = 5000L),
+      tied).toDF().collect())
+    assert(keydir.version.rows == v0.rows)
+    assert(keydir.version.batchId == 1L)
+    // the collect path merges by the same rule, whatever the row order
+    val collected = Keydir.collect(Seq(reading(1L, 5L), reading(1L, 9L, tsMs = 1000L),
+      reading(1L, 2L)).toDF(), "keydir_merge_collect")
+    assert(collected.get(1L).map(_.getAs[Long]("s_no")).contains(5L))
+  }
+
+  test("the latest view keeps its schema: names, types, order and nullability") {
+    import org.apache.spark.sql.types._
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val expected = StructType(Seq(
+      StructField("station_id", LongType, nullable = false),
+      StructField("s_no", LongType, nullable = false),
+      StructField("battery_status", StringType, nullable = true),
+      StructField("status_timestamp", TimestampType, nullable = true),
+      StructField("weather", StructType(Seq(
+        StructField("humidity", IntegerType, nullable = false),
+        StructField("temperature", IntegerType, nullable = false),
+        StructField("wind_speed", IntegerType, nullable = false))), nullable = true)))
+    val input = MemoryStream[WeatherStatus]
+    val q = WeatherPipeline.startLatest(input.toDF(), "keydir_schema")
+    try {
+      input.addData(reading(1L, 1L))
+      q.processAllAvailable()
+      assert(spark.table("keydir_schema").schema == expected)
+      assert(WeatherPipeline.latestSnapshot(spark, "keydir_schema").schema == expected)
+      assert(Keydir.of(spark.table("keydir_schema")).get.schema == expected)
+    } finally q.stop()
+  }
+
   test("under a publisher, scans show one version and point gets a published row") {
     import spark.implicits._
     val stations = 1L to 4L

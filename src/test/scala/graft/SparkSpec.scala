@@ -34,6 +34,6 @@ abstract class SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under the scratch root, deleted at JVM exit. */
+  def tmpDir(prefix: String): String = graft.util.Scratch.dir(prefix).toString
 }
