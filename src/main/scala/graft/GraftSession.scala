@@ -2,168 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The engine's one session constructor, [[harnessSession]], plus the
-  * pieces it installs: [[register]] exposes the custom Catalyst
-  * expressions (`polyhash`, `simhash64`, `minhash_sig`, ...) and the
-  * `as_of` table function to `spark.sql(...)` users, and
-  * [[installOptimizations]] adds graft's optimizer rules and planner
-  * strategy.
+/** The engine's one session constructor, [[harnessSession]]. Graft's
+  * rules, planner strategy and SQL functions reach the session through
+  * `spark.sql.extensions` ([[graft.plans.GraftExtensions]]) alone.
   */
 object GraftSession {
 
-  /** (name, builder) for every SQL-exposed custom expression — the single
-    * source of truth shared by [[register]] (programmatic sessions) and
-    * [[graft.plans.GraftExtensions]] (the `spark.sql.extensions` config
-    * deployment path), so both surfaces always expose the same functions.
-    */
-  private[graft] val sqlFunctions: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
-    "polyhash" -> (exprs => graft.functions.PolyHash(exprs.head)),
-    "simhash64" -> (exprs => graft.functions.SimHash64(exprs.head)),
-    "minhash_sig" -> (exprs => {
-      val k = exprs(1).eval(null).asInstanceOf[Number].intValue
-      graft.functions.MinHashSig(exprs.head, k)
-    }),
-    "shingle_array" -> (exprs => {
-      val n = exprs(1).eval(null).asInstanceOf[Number].intValue
-      graft.functions.ShingleArray(exprs.head, n)
-    }),
-    "kmv_sketch" -> (exprs => {
-      val k = exprs(1).eval(null).asInstanceOf[Number].intValue
-      graft.functions.KmvSketch(exprs.head, k)
-    }),
-    "freq_items" -> (exprs => {
-      val k = exprs(1).eval(null).asInstanceOf[Number].intValue
-      graft.functions.FreqItemsSketch(exprs.head, k)
-    }),
-    "bloom_agg" -> (exprs => {
-      val bits = exprs(1).eval(null).asInstanceOf[Number].intValue
-      val hashes = if (exprs.length > 2)
-        exprs(2).eval(null).asInstanceOf[Number].intValue else 5
-      graft.functions.BloomFilterAgg(exprs.head, bits, hashes)
-    }),
-    "zorder_code" -> (exprs => {
-      val bits = exprs(2).eval(null).asInstanceOf[Number].intValue
-      graft.functions.ZOrderCode(exprs.head, exprs(1), bits)
-    }),
-    // n-ary form: zorder_code_n(c1, ..., cn, bitsPer)
-    "zorder_code_n" -> (exprs => {
-      val bits = exprs.last.eval(null).asInstanceOf[Number].intValue
-      graft.functions.ZOrderCodeN(exprs.init, bits)
-    }),
-    "winnow_fp" -> (exprs => {
-      val k = exprs(1).eval(null).asInstanceOf[Number].intValue
-      val w = exprs(2).eval(null).asInstanceOf[Number].intValue
-      graft.functions.WinnowFp(exprs.head, k, w)
-    }),
-    // SQL surface uses the fixture vocab (the gate path); programmatic
-    // callers pass their own merge table through BpeTokenize directly
-    "bpe_tokenize" -> (exprs => graft.functions.BpeTokenize(exprs.head,
-      graft.ext.text.TextAnalysis.BpeFixtureMerges)),
-    "unicode_normalize" -> (exprs => {
-      val form = if (exprs.length > 1)
-        exprs(1).eval(null).toString else "NFC"
-      graft.functions.UnicodeNormalize(exprs.head, form)
-    }),
-    // SQL surface uses the fixture dictionary (the gate path);
-    // programmatic callers pass their own dict through DictTagCounts
-    "dict_tag_counts" -> (exprs => graft.functions.DictTagCounts(exprs.head,
-      graft.ext.text.TextAnalysis.TagDict)))
-
-  /** (name, builder) for every SQL-exposed TABLE function — same
-    * single-source-of-truth contract as [[sqlFunctions]], registered by
-    * both [[register]] and [[graft.plans.GraftExtensions]].
-    *
-    * `as_of(probe_view, build_view, probe_keys, build_keys, probe_ts,
-    * build_ts[, build_tie[, mode[, tolerance_seconds]]])` — the SQL
-    * surface for the point-in-time join ([[graft.operators.AsOfJoin]]):
-    * view names and column lists arrive as string literals (keys/tie as
-    * comma-separated lists; `mode` any of '', 'strict', 'forward',
-    * 'strict,forward'), the builder resolves the views in the ACTIVE
-    * session's catalog and returns the analyzed
-    * [[graft.plans.AsOfJoinNode]] plan — so `SELECT * FROM as_of(...)`
-    * plans through the same custom merge-scan exec as the Scala API,
-    * one exchange + one sort per side.
-    */
-  private[graft] val sqlTableFunctions: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] = Seq(
-    "as_of" -> (exprs => {
-      def arg(i: Int): String = {
-        val e = exprs(i)
-        require(e.foldable,
-          s"as_of argument ${i + 1} must be a literal, got $e")
-        Option(e.eval(null)).map(_.toString).getOrElse("")
-      }
-      require(exprs.length >= 6 && exprs.length <= 9,
-        "as_of(probe_view, build_view, probe_keys, build_keys, probe_ts," +
-          " build_ts[, build_tie[, mode[, tolerance_seconds]]]) takes 6-9" +
-          s" arguments, got ${exprs.length}")
-      def csv(s: String): Seq[String] =
-        s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val spark = SparkSession.active
-      val mode = if (exprs.length > 7) arg(7).toLowerCase else ""
-      require(csv(mode).forall(Seq("strict", "forward").contains),
-        s"as_of mode must be '', 'strict', 'forward' or 'strict,forward'," +
-          s" got '$mode'")
-      val tol = if (exprs.length > 8)
-        Some(exprs(8).eval(null).asInstanceOf[Number].longValue) else None
-      graft.operators.AsOfJoin.asOfExec(
-          spark.table(arg(0)), spark.table(arg(1)),
-          csv(arg(2)), csv(arg(3)), arg(4), arg(5),
-          buildTie = if (exprs.length > 6) csv(arg(6)) else Nil,
-          strict = mode.contains("strict"),
-          toleranceSeconds = tol,
-          forward = mode.contains("forward"))
-        .queryExecution.analyzed
-    }))
-
-  /** Register graft's custom expressions in the session's function registry
-    * so they're callable from SQL:
-    * {{{
-    *   GraftSession.register(spark)
-    *   spark.sql("SELECT polyhash(text), simhash64(split(text, ' ')) FROM docs")
-    * }}}
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    sqlFunctions.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    val treg = spark.sessionState.tableFunctionRegistry
-    sqlTableFunctions.foreach { case (name, builder) =>
-      treg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-  }
-
-  /** Install graft's optimizer rules (e.g. the row_number→max_by top-1
-    * rewrite, [[graft.plans.TopOnePerKeyRewrite]]) into an existing session.
-    */
-  def installOptimizations(spark: SparkSession): Unit = {
-    // order matters: the top-1 rule first, so rn <= 1 takes the cheaper
-    // min_by/max_by plan and the top-k rule only sees k >= 2
-    Seq(graft.plans.TopOnePerKeyRewrite, graft.plans.TopKPerKeyRewrite,
-        graft.plans.RangeJoinRewrite)
-      .foreach { rule =>
-        if (!spark.experimental.extraOptimizations.contains(rule)) {
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ rule
-        }
-      }
-    // planner strategy for the whole-operator as-of join node
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
-  }
-
-  /** The session every runnable main (Tool, Verify, Bench, WeatherDemo)
-    * and the `perfbench` harness build: ONE definition of the config
-    * surface, so a targeted `Tool verify` or `Tool probe` run executes
-    * under exactly the session a full Bench sweep uses — a config drift
-    * here would make targeted re-verification silently meaningless.
+  /** The session every runnable main (Tool, Verify, Bench, WeatherDemo),
+    * the `perfbench` harness and the test suites build: ONE definition of
+    * the config surface, so a targeted `Tool verify` or `Tool probe` run
+    * and every test execute under exactly the session a full Bench sweep
+    * uses — a config drift here would make targeted re-verification
+    * silently meaningless.
     * `SPARK_GRAFT_CPUS` sizes both the master and the shuffle-partition
     * count.
     */
@@ -171,6 +21,8 @@ object GraftSession {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config("spark.sql.extensions",
+        classOf[graft.plans.GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", cpus)
       // shuffle/spill files follow the scratch root (guide §6): ephemeral
       // by definition, small-write-heavy, and the root is parameterized
@@ -213,8 +65,6 @@ object GraftSession {
         ".changelogCheckpointing.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    register(spark)
-    installOptimizations(spark)
     spark
   }
 }

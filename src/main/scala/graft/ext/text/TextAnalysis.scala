@@ -299,9 +299,8 @@ object TextAnalysis {
   /** Gate for the SQL registration surface: the same fingerprint query
     * every other gate runs through the Column API, expressed as
     * `spark.sql` text against a temp view using the REGISTERED custom
-    * function (`polyhash`) — proving the
-    * [[graft.GraftSession.register]]/`GraftExtensions` function path
-    * end-to-end through the driver's oracle, not just in a spec. The
+    * function (`polyhash`) — proving the [[graft.plans.GraftExtensions]]
+    * function path end-to-end through the driver's oracle, not just in a spec. The
     * view is dropped after resolution (the resolved plan owns the scan).
     */
   def sqlSurfaceReport(spark: SparkSession, dir: String): DataFrame = {

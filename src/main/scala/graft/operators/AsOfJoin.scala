@@ -120,9 +120,8 @@ object AsOfJoin {
     * co-partitioned co-sorted children, O(1) state per partition.
     * Column names must be disjoint between the two sides (the output is
     * probe columns ++ nullable build columns); keys pair positionally
-    * between `probeKeys` and `buildKeys`. Requires
-    * [[graft.GraftSession.installOptimizations]] (or the
-    * `spark.sql.extensions` config) to have registered
+    * between `probeKeys` and `buildKeys`. Requires a session built with
+    * `spark.sql.extensions = graft.plans.GraftExtensions`, which injects
     * [[graft.plans.AsOfJoinStrategy]].
     */
   def asOfExec(probe: DataFrame, build: DataFrame,

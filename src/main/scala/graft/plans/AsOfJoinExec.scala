@@ -38,10 +38,7 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Planner strategy mapping [[AsOfJoinNode]] to [[AsOfJoinExec]] —
-  * installed via `experimental.extraStrategies`
-  * ([[graft.GraftSession.installOptimizations]]) and via
-  * [[GraftExtensions]]'s `injectPlannerStrategy` for the
-  * `spark.sql.extensions` deployment path.
+  * injected by [[GraftExtensions]] (`spark.sql.extensions`).
   */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -40,9 +40,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * among ties, so the rewrite preserves the (already nondeterministic)
   * semantics.
   *
-  * Register per-session:
-  * `spark.experimental.extraOptimizations ++= Seq(TopOnePerKeyRewrite)`
-  * or via [[GraftExtensions]] at session build time.
+  * Injected at session build time by [[GraftExtensions]].
   */
 object TopOnePerKeyRewrite extends Rule[LogicalPlan] {
 
@@ -236,38 +234,5 @@ object TopKPerKeyRewrite extends Rule[LogicalPlan] {
         Alias(GetStructField(colAttr, i, Some(a.name)), a.name)(exprId = a.exprId)
       } :+ Alias(Add(posAttr, Literal(1)), alias.name)(exprId = alias.exprId)
       Project(restored, gen)
-  }
-}
-
-/** SparkSessionExtensions injector:
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => TopOnePerKeyRewrite)
-    e.injectOptimizerRule(_ => TopKPerKeyRewrite)
-    e.injectOptimizerRule(_ => RangeJoinRewrite)
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    // the SQL function surface rides the same config switch: a cluster
-    // that sets spark.sql.extensions gets polyhash/simhash64/... in SQL
-    // without any programmatic GraftSession.register call
-    graft.GraftSession.sqlFunctions.foreach { case (name, builder) =>
-      e.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.functions", name),
-        builder))
-    }
-    // table functions too (the as_of point-in-time join's SQL surface)
-    graft.GraftSession.sqlTableFunctions.foreach { case (name, builder) =>
-      e.injectTableFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.operators", name),
-        builder))
-    }
   }
 }

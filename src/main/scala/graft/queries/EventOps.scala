@@ -1200,19 +1200,15 @@ object EventOps {
   /** [[asOfStateExec]] reached from SQL TEXT — the as-of operator's SQL
     * surface (the r13 verdict's ask: winnow_fp/bpe_tokenize set the
     * function-registration precedent; the as-of pair was Scala-only).
-    * The `as_of` TABLE function ([[graft.GraftSession.sqlTableFunctions]],
-    * registered on both the programmatic and `spark.sql.extensions`
-    * surfaces) resolves the probe/build temp views and returns the
-    * analyzed [[graft.plans.AsOfJoinNode]] plan, so the SQL query plans
-    * through the SAME custom merge-scan exec as the Scala API — and this
-    * gate shares p_asof_exec's oracle, pinning the two front doors
-    * answer-equal.
+    * The `as_of` TABLE function
+    * ([[graft.plans.GraftExtensions.sqlTableFunctions]], injected through
+    * `spark.sql.extensions`) resolves the probe/build temp views and
+    * returns the analyzed [[graft.plans.AsOfJoinNode]] plan, so the SQL
+    * query plans through the SAME custom merge-scan exec as the Scala API
+    * — and this gate shares p_asof_exec's oracle, pinning the two front
+    * doors answer-equal.
     */
   def asOfStateSql(spark: SparkSession, dir: String): DataFrame = {
-    // idempotent: the gate must work in any session (the driver's
-    // harness session already registers; a foreign session gets the
-    // same two-surface registration here)
-    graft.GraftSession.register(spark)
     val ev = events(spark, dir)
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val pv = s"asof_probes_$tag"; val bv = s"asof_build_$tag"
@@ -1940,6 +1936,10 @@ object EventOps {
     val nRewrites = 2
     @volatile var compactorErr: Option[Throwable] = None
     val compactor = new Thread(() => {
+      // a separate writer, like the stream: its jobs, and the OCC retries
+      // whose number the race decides, join no caller's job group (the
+      // thread would otherwise inherit the group of the thread starting it)
+      spark.sparkContext.clearJobGroup()
       try {
         var done = 0
         while (done < nRewrites) {

@@ -1010,8 +1010,7 @@ class CompactionSpec extends SparkSpec {
 
 class GraftSessionSpec extends SparkSpec {
 
-  test("custom expressions are SQL-callable after register()") {
-    GraftSession.register(spark)
+  test("custom expressions are SQL-callable in the harness session") {
     val r = spark.sql(
       """SELECT polyhash('abc') AS p,
         |  simhash64(array('a','b')) AS s,
@@ -1034,8 +1033,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(r2.getAs[scala.collection.Seq[Long]]("w").nonEmpty)
   }
 
-  test("custom aggregates and zorder_code are SQL-callable after register()") {
-    GraftSession.register(spark)
+  test("custom aggregates and zorder_code are SQL-callable in the harness session") {
     import spark.implicits._
     Seq(1L, 1L, 2L, 3L).toDF("v").createOrReplaceTempView("sqlreg_vals")
     try {

@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.TopOnePerKeyRewrite
+import graft.plans.{TopKPerKeyRewrite, TopOnePerKeyRewrite}
 
 class RewriteSpec extends SparkSpec {
-
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ TopOnePerKeyRewrite
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopOnePerKeyRewrite)
-  }
 
   lazy val events =
     graft.util.EventTs.readEvents(spark, "/root/testdata/sf0.001")
@@ -24,9 +16,9 @@ class RewriteSpec extends SparkSpec {
   }
 
   test("rn=1 window rewrites to a max_by aggregate with identical results") {
-    val baseline = windowTop1.collect()
+    val baseline = withRules()(windowTop1.collect())
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"))).sorted
-    withRule {
+    withRules(TopOnePerKeyRewrite) {
       val df = windowTop1
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("max_by") && !optimized.contains("row_number"),
@@ -42,7 +34,7 @@ class RewriteSpec extends SparkSpec {
   }
 
   test("ascending order uses min_by; rewrite keeps downstream projections working") {
-    withRule {
+    withRules(TopOnePerKeyRewrite) {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc)
       val first = events.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 1)
@@ -73,9 +65,9 @@ class RewriteSpec extends SparkSpec {
       ("desc nulls first", Seq(col("v").desc_nulls_first, col("id").desc)))
 
     for ((label, orders) <- cases) {
-      val baseline = top1(orders: _*).collect()
+      val baseline = withRules()(top1(orders: _*).collect())
         .map(r => (r.getString(0), r.getInt(2))).sorted
-      withRule {
+      withRules(TopOnePerKeyRewrite) {
         val rewritten = top1(orders: _*)
         val plan = rewritten.queryExecution.optimizedPlan.toString
         assert(!plan.contains("row_number"), s"$label not rewritten: ${plan.take(400)}")
@@ -87,7 +79,7 @@ class RewriteSpec extends SparkSpec {
   }
 
   test("global (empty PARTITION BY) top-1 keeps the window plan") {
-    withRule {
+    withRules(TopOnePerKeyRewrite) {
       val w = Window.orderBy(col("ts").desc)
       val global = events.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -100,15 +92,6 @@ class RewriteSpec extends SparkSpec {
     }
   }
 
-  private def withTopKRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.TopKPerKeyRewrite
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.TopKPerKeyRewrite)
-  }
-
   test("rn<=k window rewrites to a TopKBy aggregate with identical results") {
     def top3 = {
       val w = Window.partitionBy(col("user_id"))
@@ -116,9 +99,9 @@ class RewriteSpec extends SparkSpec {
       events.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("user_id"), col("event_id"), col("rn"))
     }
-    val baseline = top3.collect()
+    val baseline = withRules()(top3.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-    withTopKRule {
+    withRules(TopKPerKeyRewrite) {
       val df = top3
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("top_k_by") && !optimized.contains("row_number"),
@@ -151,9 +134,9 @@ class RewriteSpec extends SparkSpec {
       Seq(col("v").desc, col("id").desc),
       Seq(col("v").desc_nulls_first, col("id").desc))
     for (orders <- cases) {
-      val baseline = topk(orders).collect()
+      val baseline = withRules()(topk(orders).collect())
         .map(r => (r.getString(0), r.getInt(2), r.getInt(3))).sorted
-      withTopKRule {
+      withRules(TopKPerKeyRewrite) {
         val rewritten = topk(orders)
         assert(!rewritten.queryExecution.optimizedPlan.toString
           .contains("row_number"))
@@ -166,7 +149,7 @@ class RewriteSpec extends SparkSpec {
   }
 
   test("top-k rule skips rn<=1 (top-1 rule's case) and global windows") {
-    withTopKRule {
+    withRules(TopKPerKeyRewrite) {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc)
       val one = events.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 1)
@@ -179,7 +162,7 @@ class RewriteSpec extends SparkSpec {
   }
 
   test("rule leaves non-matching windows untouched") {
-    withRule {
+    withRules(TopOnePerKeyRewrite) {
       // rank() (not row_number), rn = 2, mixed sort directions → no rewrite
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").asc)
@@ -203,14 +186,6 @@ class RewriteSpec extends SparkSpec {
 class RangeJoinRewriteSpec extends SparkSpec {
   import graft.plans.RangeJoinRewrite
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
-  }
-
   lazy val events =
     graft.util.EventTs.readEvents(spark, "/root/testdata/sf0.001")
       .select(col("ts"), col("user_id"), col("event_id"))
@@ -228,10 +203,10 @@ class RangeJoinRewriteSpec extends SparkSpec {
     col("ts") >= col("s") && col("ts") < col("e"))
 
   test("time-band join rewrites to a cell equi-join with identical results") {
-    val baseline = naive.collect()
+    val baseline = withRules()(naive.collect())
       .map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("iv_id"))).sorted
     assert(baseline.nonEmpty)
-    withRule {
+    withRules(RangeJoinRewrite) {
       val df = naive
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("__range_cell"), optimized.take(1200))
@@ -268,11 +243,11 @@ class RangeJoinRewriteSpec extends SparkSpec {
     // def, not val: Dataset caches its QueryExecution, so the plan must be
     // rebuilt after the rule is installed
     def band = ev.join(iv, col("ts") >= col("s") && col("ts") < col("e"))
-    val baseline = band.collect()
+    val baseline = withRules()(band.collect())
       .map(r => (r.getAs[Long]("id"), r.getAs[Long]("iv_id"))).sorted
     assert(baseline.nonEmpty)
     spark.conf.set("spark.graft.rangeJoin.maxCellsPerRow", "4")
-    try withRule {
+    try withRules(RangeJoinRewrite) {
       val df = band
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("__range_cell"), optimized.take(1200))
@@ -284,30 +259,24 @@ class RangeJoinRewriteSpec extends SparkSpec {
   }
 
   test("band joins with equi keys keep the keys; plain equi joins untouched") {
-    withRule {
-      // same-station band join: the station equality must survive as a
-      // join key alongside the injected cell
-      val probes = events.select(col("user_id").as("u2"),
-        col("ts").as("pt"), col("event_id").as("pid"))
-      val band = events.join(probes,
-        col("user_id") === col("u2") &&
-          col("ts") >= col("pt") - expr("INTERVAL 1 hour") &&
-          col("ts") < col("pt"))
+    // same-station band join: the station equality must survive as a
+    // join key alongside the injected cell
+    val probes = events.select(col("user_id").as("u2"),
+      col("ts").as("pt"), col("event_id").as("pid"))
+    def band = events.join(probes,
+      col("user_id") === col("u2") &&
+        col("ts") >= col("pt") - expr("INTERVAL 1 hour") &&
+        col("ts") < col("pt"))
+    val got = withRules(RangeJoinRewrite) {
       val optimized = band.queryExecution.optimizedPlan.toString
       assert(optimized.contains("__range_cell"), optimized.take(1200))
-      // cross-engine sanity on a keyed band: rewrite equals no-rewrite
-      val got = band.count()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
-      val plain = band.count()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRewrite
-      assert(got == plain)
-
       // no range pair -> untouched
       val equi = events.join(probes, col("user_id") === col("u2"))
       assert(!equi.queryExecution.optimizedPlan.toString
         .contains("__range_cell"))
+      band.count()
     }
+    // cross-engine sanity on a keyed band: rewrite equals no-rewrite
+    assert(got == withRules()(band.count()))
   }
 }

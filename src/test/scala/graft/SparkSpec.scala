@@ -1,39 +1,31 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession (local[4], UTC,
-  * small shuffle partitions) so suites don't pay repeated startup.
+/** Shared session for all suites — the production session
+  * ([[GraftSession.harnessSession]]), built once per JVM so suites don't
+  * pay repeated startup and run under the config the mains run with.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // the planner strategy surface (AsOfJoinExec) must exist wherever
-    // the operators that plan through it run — but NOT the optimizer
-    // rules: RewriteSpec installs/uninstalls those per test to compare
-    // with-vs-without plans, so a globally installed rule would break
-    // its baselines. A strategy for a node nothing else produces is
-    // inert for every other suite.
-    s.experimental.extraStrategies =
-      s.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.harnessSession()
 }
 
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.spark
   /** A fresh directory under the scratch root, deleted at JVM exit. */
   def tmpDir(prefix: String): String = graft.util.Scratch.dir(prefix).toString
+
+  /** Run `f` with every graft optimizer rule except `keep` excluded
+    * (`withRules()` is the plain-Spark baseline a rewrite is compared
+    * with). Plans are built when a Dataset is first optimized, so build
+    * the frames under test inside `f`.
+    */
+  def withRules[A](keep: Rule[_]*)(f: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, graft.plans.GraftExtensions.optimizerRules
+      .filterNot(keep.contains).map(_.ruleName).mkString(","))
+    try f finally spark.conf.unset(key)
+  }
 }
