@@ -15,7 +15,12 @@ object GraftSession {
     * uses — a config drift here would make targeted re-verification
     * silently meaningless.
     * `SPARK_GRAFT_CPUS` sizes both the master and the shuffle-partition
-    * count.
+    * count. Every file the session makes (shuffle and spill files, the
+    * warehouse of managed tables) lives under the scratch root
+    * ([[graft.util.Scratch]]), and `file:` paths go through
+    * [[graft.util.InProcessLocalFileSystem]] and
+    * [[graft.util.InProcessLocalFs]], which set permissions and check
+    * links without starting a child process.
     */
   def harnessSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -32,6 +37,20 @@ object GraftSession {
       // state-commit-heavy gate (measured 16 vs 821 MB/s at 4k dsync)
       .config("spark.local.dir",
         graft.util.Scratch.dir("spark_local").toString)
+      // managed tables (`saveAsTable`, e.g. Scale.writeBucketed) go to the
+      // scratch root with the rest of the session's files, not into a
+      // `spark-warehouse/` under whatever directory the process runs in
+      .config("spark.sql.warehouse.dir",
+        graft.util.Scratch.dir("spark_warehouse").toString)
+      // `file:` paths without a child process per chmod or link check
+      // (graft.util.LocalFs): the FileSystem key serves file sinks and
+      // lake writes, the AbstractFileSystem key the FileContext every
+      // streaming checkpoint commits through. Other schemes (HDFS,
+      // object stores) never read these keys.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.util.InProcessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.util.InProcessLocalFs].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

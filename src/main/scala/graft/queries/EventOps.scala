@@ -429,8 +429,8 @@ object EventOps {
 
   /** Value-state TTL gate ([[graft.streaming.TwsTtl]]) — the one
     * state-lifecycle knob the rest of the matrix doesn't cover. ONE
-    * query, two micro-batches: slice A (`event_id ≡ 0 mod 2`) and slice
-    * B staged upfront as separate files, `maxFilesPerTrigger=1` to pin
+    * query, two data micro-batches: slice A (`event_id ≡ 0 mod 2`) and
+    * slice B staged upfront as separate files, `maxFilesPerTrigger=1` to pin
     * one file per batch (mtime-ordered), and a 1 s ProcessingTime
     * trigger — 2.5× the 400 ms TTL — as the between-batch clock gap (the
     * memory sink cannot recover a checkpoint, so the gap must come from
@@ -440,9 +440,13 @@ object EventOps {
     * `last_dur` accumulated to |A|+|B| — the differential that proves
     * expired state stopped influencing output (a checkpoint loss or
     * restart artifact would reset BOTH). Deterministic because TTL
-    * rides the micro-batch processing timestamp: batch B fires a full
-    * trigger interval after batch A's timestamp, past every A-side
-    * deadline, and within a batch state is written after it is read.
+    * rides the micro-batch processing timestamp: every trigger after the
+    * first fires on a multiple of the interval, and an empty file staged
+    * before A makes A's batch the second, so batch B fires at least a
+    * full interval after batch A's timestamp, past every A-side
+    * deadline, however short A's batch is (with A first, a short first
+    * batch could put B's trigger within the TTL of A's). Within a batch
+    * state is written after it is read.
     * Keys absent from one slice degrade to the single-batch row on both
     * columns, which the oracle's CASE reproduces.
     */
@@ -455,6 +459,7 @@ object EventOps {
     val base = System.currentTimeMillis()
     val rocks = "org.apache.spark.sql.execution.streaming.state" +
       ".RocksDBStateStoreProvider"
+    stageParquetFile(raw.limit(0), stage, "0.parquet", base - 60000)
     stageParquetFile(raw.filter(col("event_id") % 2 === 0), stage,
       "a.parquet", base)
     stageParquetFile(raw.filter(col("event_id") % 2 === 1), stage,

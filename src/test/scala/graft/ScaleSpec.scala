@@ -10,26 +10,10 @@ class ScaleSpec extends SparkSpec {
   lazy val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
   test("bucketed tables join without an exchange on either side") {
-    // conf.set lives INSIDE the try: if the pre-test cleanup below ever
-    // threw, the finally must still restore auto-broadcast for the rest
-    // of the JVM-shared session (every later plan-shape assertion depends
-    // on it). Warehouse location resolved from the session conf, not a
-    // cwd-relative literal that silently misses when the fork's cwd and
-    // spark.sql.warehouse.dir diverge.
+    // the finally restores auto-broadcast for the rest of the JVM-shared
+    // session (every later plan-shape assertion depends on it)
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val warehouse = new java.net.URI(
-        spark.conf.get("spark.sql.warehouse.dir")).getPath
-      Seq("li_b", "ord_b").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new java.io.File(warehouse, t)
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(loc)
-        }
-      }
       Scale.writeBucketed(li.select("l_orderkey", "l_quantity"),
         "li_b", "l_orderkey", nBuckets = 4)
       Scale.writeBucketed(orders.select("o_orderkey", "o_totalprice")
