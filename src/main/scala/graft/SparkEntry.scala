@@ -20,10 +20,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** Pre-stage the per-process shared artifacts the dedup/corpus gates
-    * read: the LSH pair table + cluster table (fed to both CC strategies
-    * and the corpus consumers) and the incremental-maintenance base
-    * (prepared even-split index + its cluster labels). In production
+  /** Pre-stage the session's shared [[graft.util.Artifacts]] that the
+    * dedup/corpus and skipping gates read: the LSH pair table + cluster
+    * table (fed to both CC strategies and the corpus consumers), the
+    * incremental-maintenance base (prepared even-split index + its
+    * cluster labels) and the two skipping lakes. In production
     * these are scratch-storage artifacts written once per corpus
     * snapshot; staging them up front makes each gate measure its own
     * marginal work — exactly the nightly cost split. Called by

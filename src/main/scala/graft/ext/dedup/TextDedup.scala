@@ -969,96 +969,52 @@ object TextDedup {
         (col("doc_id") === col("cluster_id")).as("is_canonical"))
   }
 
-  /** Hard bound on memoized cluster tables: a driver session touches a
-    * handful of (corpus, params) keys; past this the memo evicts the
-    * least-recently-used entry rather than grow without bound (the
-    * dropped frame's checkpoint blocks are reclaimed once unreferenced),
-    * so a churning session re-pays at most ONE artifact's compute per
-    * overflow, never all consumers at once. A long-lived service should
-    * use the scratch-parquet + TTL form the [[dedupClustersShared]]
-    * scaladoc prescribes instead of this in-memory memo.
-    */
-  private val ClusterMemoMaxEntries = 16
-
-  private val clusterMemo =
-    new graft.util.LruMemo[String, DataFrame](ClusterMemoMaxEntries)
-
-  private val pairsMemo =
-    new graft.util.LruMemo[String, DataFrame](ClusterMemoMaxEntries)
-
-  /** [[minhashLshPairs]] behind the same per-process memo discipline as
+  /** [[minhashLshPairs]] as a shared [[graft.util.Artifacts]] entry, like
     * [[dedupClustersShared]]: the pair table is the expensive half of
     * clustering (shingles → signatures → band join → exact verify; the
     * CC pass over it is cheap by comparison, ∝ true duplication) and it
     * feeds BOTH cluster strategies plus any survivor policy. The first
-    * caller materializes it eagerly (`localCheckpoint` — the table is
-    * tiny next to the corpus); later callers, including a different
-    * [[CcStrategy]], reuse the checkpointed blocks. 100 TB analog: the
-    * pair table written once per corpus snapshot to scratch storage,
-    * clustered from there by every downstream policy.
+    * caller materializes it eagerly (`minhashLshPairsOf` already
+    * `localCheckpoint`s; the table is tiny next to the corpus); later
+    * callers, including a different [[CcStrategy]], reuse the
+    * checkpointed blocks. 100 TB analog: the pair table written once per
+    * corpus snapshot to scratch storage, clustered from there by every
+    * downstream policy.
     */
   def minhashLshPairsShared(spark: SparkSession, dir: String,
       threshold: Double = 0.8, numHashes: Int = 32, bands: Int = 8,
-      n: Int = 3): DataFrame = {
-    val key = Seq(spark.sparkContext.applicationId, dir, threshold,
-      numHashes, bands, n).mkString("|")
-    pairsMemo.get(key) match {
-      case Some(cached) => cached
-      case None =>
-        val computed =
-          minhashLshPairs(spark, dir, threshold, numHashes, bands, n)
-        // minhashLshPairsOf already localCheckpoints eagerly
-        pairsMemo.putIfAbsent(key, computed)
+      n: Int = 3): DataFrame =
+    graft.util.Artifacts.shared(spark, "lsh_pairs", dir, threshold,
+        numHashes, bands, n) {
+      minhashLshPairs(spark, dir, threshold, numHashes, bands, n)
     }
-  }
 
-  /** Drop every memoized cluster table (e.g. between tenants or after a
-    * corpus rewrite). Safe concurrently: in-flight readers keep their
-    * frames; only the memo's references are cleared.
-    */
-  def clearClusterMemo(): Unit = {
-    clusterMemo.clear(); pairsMemo.clear(); incBaseMemo.clear()
-  }
-
-  /** [[dedupClusters]] behind a per-process memo: the cluster table is the
-    * single most expensive artifact in the suite (banded candidate join +
-    * iterative connected components) and it feeds FOUR downstream
-    * consumers (the cluster report itself, keep-best survivor selection,
-    * `Corpus.prepare`'s dup filter, `Corpus.leakageSafeSplit`'s
-    * representatives). Computing it per consumer re-pays the iterative
-    * job each time; here the first caller materializes it with an eager
-    * `localCheckpoint` (the table is ∝ true duplication — tiny next to
-    * the corpus) and later callers reuse the checkpointed blocks. The
-    * production analog at 100 TB is writing the cluster table once per
-    * corpus snapshot to scratch storage and reading it from every
-    * consumer — same artifact, durable instead of in-memory. Keyed by
-    * application id + all semantic parameters, so distinct sessions,
-    * corpora, or thresholds never share. The memo's footprint is one tiny
-    * checkpointed table per (corpus, params) the process touches — a
-    * handful for a driver session; a long-lived multi-tenant service
-    * would use the scratch-parquet form with TTL eviction instead.
+  /** [[dedupClusters]] as a shared [[graft.util.Artifacts]] entry: the
+    * cluster table is the single most expensive artifact in the suite
+    * (banded candidate join + iterative connected components) and it
+    * feeds FOUR downstream consumers (the cluster report itself,
+    * keep-best survivor selection, `Corpus.prepare`'s dup filter,
+    * `Corpus.leakageSafeSplit`'s representatives). Computing it per
+    * consumer re-pays the iterative job each time; here the first caller
+    * materializes it with an eager `localCheckpoint` (the table is ∝
+    * true duplication — tiny next to the corpus) and later callers reuse
+    * the checkpointed blocks. The production analog at 100 TB is writing
+    * the cluster table once per corpus snapshot to scratch storage and
+    * reading it from every consumer — same artifact, durable instead of
+    * in-memory; a long-lived multi-tenant service would use that
+    * scratch-parquet form with TTL eviction instead.
     */
   def dedupClustersShared(spark: SparkSession, dir: String,
       threshold: Double = 0.8, numHashes: Int = 32, bands: Int = 8,
-      n: Int = 3, strategy: CcStrategy = CcStrategy.MinLabel): DataFrame = {
-    val key = Seq(spark.sparkContext.applicationId, dir, threshold,
-      numHashes, bands, n, strategy).mkString("|")
-    // get + putIfAbsent rather than compute-under-lock: the cluster build
-    // is a minutes-scale multi-stage Spark job and must never run while
-    // holding the memo's monitor. The rare racing duplicate computation
-    // is benign (both sides produce the same table; the loser's
-    // checkpoint blocks are garbage-collected with its frame).
-    clusterMemo.get(key) match {
-      case Some(cached) => cached
-      case None =>
-        // built over the SHARED pair table, so a second strategy (or a
-        // survivor policy) over the same corpus re-pays only its CC pass
-        val computed = clustersFromPairs(
-          minhashLshPairsShared(spark, dir, threshold, numHashes, bands, n),
-          strategy).localCheckpoint(true)
-        clusterMemo.putIfAbsent(key, computed)
+      n: Int = 3, strategy: CcStrategy = CcStrategy.MinLabel): DataFrame =
+    graft.util.Artifacts.shared(spark, "dedup_clusters", dir, threshold,
+        numHashes, bands, n, strategy) {
+      // built over the SHARED pair table, so a second strategy (or a
+      // survivor policy) over the same corpus re-pays only its CC pass
+      clustersFromPairs(
+        minhashLshPairsShared(spark, dir, threshold, numHashes, bands, n),
+        strategy).localCheckpoint(true)
     }
-  }
 
   /** [[dedupClusters]] under an explicit strategy over the SHARED pair
     * table — the second-strategy consumer ([[CcStrategy.LargeStarSmallStar]]
@@ -1208,38 +1164,29 @@ object TextDedup {
   final case class IncrementalBase(prepared: PreparedIndex,
     oldLabels: DataFrame)
 
-  private val incBaseMemo =
-    new graft.util.LruMemo[String, IncrementalBase](ClusterMemoMaxEntries)
-
-  /** Drop memoized incremental bases (between tenants / corpus rewrites). */
-  def clearIncrementalBaseMemo(): Unit = incBaseMemo.clear()
-
-  /** Build (or fetch) the memoized [[IncrementalBase]] for the gate's
-    * even-doc_id index split. Checkpoint pinning (not `.persist()`) so the
-    * artifact is lineage-free and eagerly materialized — the first caller
-    * (or [[graft.SparkEntry.prestage]]) pays the build exactly once per
-    * process.
+  /** Build (or fetch) the shared [[IncrementalBase]] for the gate's
+    * even-doc_id index split, a [[graft.util.Artifacts]] entry.
+    * Checkpoint pinning (not `.persist()`) so the artifact is
+    * lineage-free and eagerly materialized — the first caller (or
+    * [[graft.SparkEntry.prestage]]) pays the build exactly once per
+    * session.
     */
   def incrementalBaseShared(spark: SparkSession, dir: String,
       threshold: Double = 0.8, numHashes: Int = 32, bands: Int = 8,
       n: Int = 3,
-      strategy: CcStrategy = CcStrategy.MinLabel): IncrementalBase = {
-    val key = Seq(spark.sparkContext.applicationId, dir, threshold,
-      numHashes, bands, n, strategy).mkString("|")
-    incBaseMemo.get(key) match {
-      case Some(cached) => cached
-      case None =>
-        val raw = prepareIndex(
-          docs(spark, dir).filter(col("doc_id") % 2 === 0),
-          numHashes, bands, n)
-        val pinned = PreparedIndex(raw.shingles.localCheckpoint(true),
-          raw.bandKeys.localCheckpoint(true))
-        val oldLabels = connectedComponents(
-          pairsWithinPrepared(pinned, threshold), strategy = strategy)
-          .localCheckpoint(true)
-        incBaseMemo.putIfAbsent(key, IncrementalBase(pinned, oldLabels))
+      strategy: CcStrategy = CcStrategy.MinLabel): IncrementalBase =
+    graft.util.Artifacts.shared(spark, "incremental_base", dir, threshold,
+        numHashes, bands, n, strategy) {
+      val raw = prepareIndex(
+        docs(spark, dir).filter(col("doc_id") % 2 === 0),
+        numHashes, bands, n)
+      val pinned = PreparedIndex(raw.shingles.localCheckpoint(true),
+        raw.bandKeys.localCheckpoint(true))
+      val oldLabels = connectedComponents(
+        pairsWithinPrepared(pinned, threshold), strategy = strategy)
+        .localCheckpoint(true)
+      IncrementalBase(pinned, oldLabels)
     }
-  }
 
   /** Gated incremental cluster maintenance: index = even doc_ids, delta =
     * odd (the [[incrementalNearDups]] split); the result must HASH-EQUAL

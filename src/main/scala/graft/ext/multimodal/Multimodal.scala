@@ -841,30 +841,21 @@ object Multimodal {
     }
   }
 
-  private val frameMemo = new graft.util.LruMemo[String, DataFrame](4)
-
-  /** Drop memoized frame sets (e.g. after a corpus rewrite). */
-  def clearFrameMemo(): Unit = frameMemo.clear()
-
-  /** The decoded frame table behind a per-process memo: the PNG encode +
-    * demux + per-frame decode is the expensive part of both video gates
-    * (`x_multimodal_video` per-frame, `x_multimodal_vstats` rollup), so
-    * the first caller materializes it with an eager `localCheckpoint` and
-    * the second reads the checkpointed blocks — the same shared-artifact
-    * shape as `TextDedup.dedupClustersShared`. At 100 TB the analog is
-    * writing the frame table to scratch storage once per media snapshot.
+  /** The decoded frame table as a shared [[graft.util.Artifacts]] entry:
+    * the PNG encode + demux + per-frame decode is the expensive part of
+    * both video gates (`x_multimodal_video` per-frame,
+    * `x_multimodal_vstats` rollup), so the first caller materializes it
+    * with an eager `localCheckpoint` and the second reads the
+    * checkpointed blocks — the same shape as
+    * `TextDedup.dedupClustersShared`. At 100 TB the analog is writing the
+    * frame table to scratch storage once per media snapshot.
     */
   def decodedVideoFramesShared(spark: SparkSession,
-      dir: String): DataFrame = {
-    val key = Seq(spark.sparkContext.applicationId, dir).mkString("|")
-    frameMemo.get(key) match {
-      case Some(cached) => cached
-      case None =>
-        val computed = decodeVideo(videoMediaFromDocuments(spark, dir))
-          .toDF().localCheckpoint(true)
-        frameMemo.putIfAbsent(key, computed)
+      dir: String): DataFrame =
+    graft.util.Artifacts.shared(spark, "video_frames", dir) {
+      decodeVideo(videoMediaFromDocuments(spark, dir)).toDF()
+        .localCheckpoint(true)
     }
-  }
 
   /** Gate entry for the video pipeline: container demux + per-frame real
     * decodes, oracle-predicted frame for frame from the same integer

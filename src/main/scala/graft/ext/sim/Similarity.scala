@@ -261,35 +261,21 @@ object Similarity {
       .limit(k)
   }
 
-  private val indexMemo = new graft.util.LruMemo[String, String](4)
-
-  /** Drop memoized shared-index paths (e.g. after an in-session corpus
-    * rewrite at the same directory — the memo key is the PATH, not the
-    * content, so a rewritten corpus must invalidate explicitly; same
-    * contract as `TextDedup.clearClusterMemo`).
-    */
-  def clearIndexMemo(): Unit = indexMemo.clear()
-
   /** The gate-config LSH index (nBits = 6), built at most once per
-    * (session, corpus): both indexed-ANN gates probe the SAME immutable
-    * artifact, so the second gate reads the directories the first one
-    * wrote — the real serving topology (one index, many queries) instead
-    * of one build per query. Append/maintenance gates keep their own
-    * private paths because they mutate. A racing duplicate build lands in
-    * a second scratch dir; the loser is swept by the Scratch shutdown
-    * hook.
+    * (session, corpus) as a [[graft.util.Artifacts]] entry: both
+    * indexed-ANN gates probe the SAME immutable artifact, so the second
+    * gate reads the directories the first one wrote — the real serving
+    * topology (one index, many queries) instead of one build per query.
+    * Append/maintenance gates keep their own private paths because they
+    * mutate.
     */
   private def sharedLshIndex(spark: SparkSession, dir: String,
-      nBits: Int): String = {
-    val key = Seq(spark.sparkContext.applicationId, dir, nBits).mkString("|")
-    indexMemo.get(key) match {
-      case Some(p) => p
-      case None =>
-        val p = graft.util.Scratch.dir("graft_lsh_index_shared").toString
-        writeLshIndex(spark, dir, p, nBits)
-        indexMemo.putIfAbsent(key, p)
+      nBits: Int): String =
+    graft.util.Artifacts.shared(spark, "lsh_index", dir, nBits) {
+      val p = graft.util.Scratch.dir("graft_lsh_index_shared").toString
+      writeLshIndex(spark, dir, p, nBits)
+      p
     }
-  }
 
   /** Gated indexed-ANN report: builds (or reuses) the shared scratch
     * index, probes all buckets (exactness config) with vec 0's embedding —
@@ -807,7 +793,7 @@ object Similarity {
     * irrelevant; a lost or doubled streamed vector still shifts it),
     * `n_versions` = bootstrap + one per batch, and the odd-id row
     * count + id-sum over the INDEX table (each streamed row exactly
-    * once). PQ codebooks come from the corpus-level fit memo (shared
+    * once). PQ codebooks come from the corpus-level `pq_fit` artifact (shared
     * with the other PQ gates — the codebook is ADC-ranking-only here,
     * never correctness). Solo floor ~3–5 s: two AvailableNow drain
     * cycles + three lake publications, the x_ann_stream class
@@ -1026,33 +1012,21 @@ object Similarity {
     * full corpus happens distributed via [[ivfAssign]]. For huge k use a
     * distributed k-means instead — this is the IVF-list builder, where k is
     * typically √n and the sample covers it.
+    *
+    * The fits over a CORPUS DIRECTORY (this and [[pqFitCodebooks]]) are
+    * shared [[graft.util.Artifacts]] entries: the IVF/PQ gates each need
+    * the same codebooks, and a serving deployment trains a quantizer
+    * once per corpus snapshot, not once per query — one fit, many
+    * consumers (the sharedLshIndex topology for driver-side artifacts).
+    * The `...Of` frame variants stay unshared: an arbitrary DataFrame
+    * has no stable identity to key on.
     */
-  /** Memo for the deterministic quantizer fits over a CORPUS DIRECTORY
-    * (seeded sample → Lloyd): the IVF/PQ gates each need the same
-    * codebooks, and a serving deployment trains a quantizer once per
-    * corpus snapshot, not once per query — one fit, many consumers
-    * (the sharedLshIndex topology for driver-side artifacts). The
-    * `...Of` frame variants stay unmemoized: an arbitrary DataFrame has
-    * no stable identity to key on.
-    */
-  private val fitMemo = new graft.util.LruMemo[String, AnyRef](8)
-
-  /** Drop memoized quantizer fits (after an in-session corpus rewrite
-    * at the same directory — same contract as [[clearIndexMemo]]).
-    */
-  def clearFitMemo(): Unit = fitMemo.clear()
-
   def ivfFitCentroids(spark: SparkSession, dir: String, k: Int = 16,
-      iters: Int = 8, sampleSize: Int = 2048, seed: Long = 42L): Array[Array[Double]] = {
-    val key = Seq("ivf", spark.sparkContext.applicationId, dir, k, iters,
-      sampleSize, seed).mkString("|")
-    fitMemo.get(key) match {
-      case Some(c) => c.asInstanceOf[Array[Array[Double]]]
-      case None => fitMemo.putIfAbsent(key,
-          ivfFitCentroidsOf(emb(spark, dir), k, iters, sampleSize, seed))
-        .asInstanceOf[Array[Array[Double]]]
+      iters: Int = 8, sampleSize: Int = 2048, seed: Long = 42L): Array[Array[Double]] =
+    graft.util.Artifacts.shared(spark, "ivf_fit", dir, k, iters, sampleSize,
+        seed) {
+      ivfFitCentroidsOf(emb(spark, dir), k, iters, sampleSize, seed)
     }
-  }
 
   /** [[ivfFitCentroids]] over an explicit (vec_id, embedding) frame —
     * lets maintenance scenarios fit the quantizer on the RESIDENT corpus
@@ -1289,30 +1263,25 @@ object Similarity {
     */
   def pqFitCodebooks(spark: SparkSession, dir: String, m: Int = 16,
       codes: Int = 128, iters: Int = 8, sampleSize: Int = 2048,
-      seed: Long = 42L): Array[Array[Array[Double]]] = {
-    val key = Seq("pq", spark.sparkContext.applicationId, dir, m, codes,
-      iters, sampleSize, seed).mkString("|")
-    fitMemo.get(key) match {
-      case Some(c) => return c.asInstanceOf[Array[Array[Array[Double]]]]
-      case None =>
+      seed: Long = 42L): Array[Array[Array[Double]]] =
+    graft.util.Artifacts.shared(spark, "pq_fit", dir, m, codes, iters,
+        sampleSize, seed) {
+      val sample = boundedSample(spark, dir, sampleSize, seed)
+      require(sample.length >= codes,
+        s"sample ${sample.length} < codes=$codes")
+      val dims = sample(0).length
+      require(dims % m == 0, s"dims $dims not divisible by m=$m")
+      val sub = dims / m
+      // the m subspace fits are independent — run them on the driver's
+      // cores (the sample is bounded, so this stays a sub-second local step)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.DurationInt
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      val fits = (0 until m).map { s => Future {
+        lloyd(sample.map(v => v.slice(s * sub, (s + 1) * sub)), codes, iters)
+      }}
+      Await.result(Future.sequence(fits), 10.minutes).toArray
     }
-    val sample = boundedSample(spark, dir, sampleSize, seed)
-    require(sample.length >= codes, s"sample ${sample.length} < codes=$codes")
-    val dims = sample(0).length
-    require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val sub = dims / m
-    // the m subspace fits are independent — run them on the driver's cores
-    // (the sample is bounded, so this stays a sub-second local step)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fits = (0 until m).map { s => Future {
-      lloyd(sample.map(v => v.slice(s * sub, (s + 1) * sub)), codes, iters)
-    }}
-    fitMemo.putIfAbsent(key,
-        Await.result(Future.sequence(fits), 10.minutes).toArray)
-      .asInstanceOf[Array[Array[Array[Double]]]]
-  }
 
   /** Distributed PQ encoding: per subspace, one codegen'd nearest-centroid
     * pass over the sliced vector; the codebooks ride inside the expressions

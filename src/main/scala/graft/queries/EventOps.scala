@@ -590,76 +590,58 @@ object EventOps {
       java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
   }
 
-  /** Memo for the staged source directories behind
-    * [[eventsStreamWithFlush]]: the staged fixture (events copy + two
-    * flush sentinels) is IMMUTABLE once written and identical for every
-    * gate that streams the same (corpus, slice), but ~12 gate
-    * invocations were each re-paying the copy plus two single-file
-    * Spark write jobs. Readers never mutate the directory — each gate
-    * runs its own query over its own fresh checkpoint — so one staging
-    * per (session, corpus, slice) is behavior-identical; only the
-    * directory's creation cost is shared (the sharedLshIndex topology,
-    * applied to stream fixtures). Keyed by slice TAG, not Column:
-    * a Column has no stable identity.
-    */
-  private val stageMemo = new graft.util.LruMemo[String, String](8)
-
-  /** Drop memoized staged stream sources (after an in-session corpus
-    * rewrite at the same directory — same contract as
-    * `Similarity.clearIndexMemo`).
-    */
-  def clearStageMemo(): Unit = stageMemo.clear()
-
   /** Staged file stream + far-future flush sentinels; `slice` (raw,
     * pre-normalization rows) restricts the staged events — `None`
     * stages the whole file byte-identical via copy. One definition for
     * the single-source append gates AND each leg of the union gate, so
-    * the sentinel encoding logic cannot drift between them. `sliceTag`
-    * names the slice for the staging memo ("all" must only ever pair
-    * with `slice = None`, and a distinct tag per distinct predicate).
+    * the sentinel encoding logic cannot drift between them. The staged
+    * directory is IMMUTABLE and identical for every gate that streams the
+    * same (corpus, slice), so ~12 gate invocations share one
+    * [[graft.util.Artifacts]] staging instead of each re-paying the copy
+    * plus two single-file Spark write jobs; each gate still runs its own
+    * query over its own fresh checkpoint. Keyed by `sliceTag`, not the
+    * Column (which has no stable identity): "all" must only ever pair
+    * with `slice = None`, and a distinct tag per distinct predicate.
     */
   private def eventsStreamWithFlush(spark: SparkSession, dir: String,
       slice: Option[org.apache.spark.sql.Column] = None,
       sliceTag: String = "all"): DataFrame = {
-    val key = Seq(spark.sparkContext.applicationId, dir, sliceTag)
-      .mkString("|")
-    val staged = stageMemo.get(key) match {
-      case Some(p) => p
-      case None =>
-        val stage = graft.util.Scratch.dir("graft_stream_append_src")
-        val base = System.currentTimeMillis()
-        slice match {
-          case None =>
-            val eventsFile = stage.resolve("events.parquet")
-            java.nio.file.Files.copy(
-              java.nio.file.Paths.get(s"$dir/events.parquet"), eventsFile)
-            java.nio.file.Files.setLastModifiedTime(eventsFile,
-              java.nio.file.attribute.FileTime.fromMillis(base))
-          case Some(cond) =>
-            stageParquetFile(
-              spark.read.parquet(s"$dir/events.parquet").filter(cond),
-              stage, "events.parquet", base)
-        }
-        // 2100-01-01 / 2100-01-02 as nanos — far past any real event
-        // time. The sentinel file must carry the SAME physical ts
-        // encoding as the real events file (one user schema decodes the
-        // whole directory), so the nanos literal is re-encoded to the
-        // footer's actual dtype.
-        val rawSchema = graft.util.EventTs.rawEventsSchema(spark, dir)
-        Seq(("flush1.parquet", 4102444800000000000L, 60),
-            ("flush2.parquet", 4102531200000000000L, 120)).foreach {
-          case (name, tsNanos, offsetSec) =>
-            import spark.implicits._
-            stageParquetFile(
-              graft.util.EventTs.nanosColTo(
-                Seq((-1L, tsNanos, -1L, "__flush__", 0.0,
-                    Option.empty[String]))
-                  .toDF("event_id", "ts", "user_id", "event_type",
-                    "value", "props"),
-                rawSchema("ts").dataType),
-              stage, name, base + offsetSec * 1000L)
-        }
-        stageMemo.putIfAbsent(key, stage.toString)
+    val staged = graft.util.Artifacts.shared(spark, "stream_stage", dir,
+        sliceTag) {
+      val stage = graft.util.Scratch.dir("graft_stream_append_src")
+      val base = System.currentTimeMillis()
+      slice match {
+        case None =>
+          val eventsFile = stage.resolve("events.parquet")
+          java.nio.file.Files.copy(
+            java.nio.file.Paths.get(s"$dir/events.parquet"), eventsFile)
+          java.nio.file.Files.setLastModifiedTime(eventsFile,
+            java.nio.file.attribute.FileTime.fromMillis(base))
+        case Some(cond) =>
+          stageParquetFile(
+            spark.read.parquet(s"$dir/events.parquet").filter(cond),
+            stage, "events.parquet", base)
+      }
+      // 2100-01-01 / 2100-01-02 as nanos — far past any real event
+      // time. The sentinel file must carry the SAME physical ts
+      // encoding as the real events file (one user schema decodes the
+      // whole directory), so the nanos literal is re-encoded to the
+      // footer's actual dtype.
+      val rawSchema = graft.util.EventTs.rawEventsSchema(spark, dir)
+      Seq(("flush1.parquet", 4102444800000000000L, 60),
+          ("flush2.parquet", 4102531200000000000L, 120)).foreach {
+        case (name, tsNanos, offsetSec) =>
+          import spark.implicits._
+          stageParquetFile(
+            graft.util.EventTs.nanosColTo(
+              Seq((-1L, tsNanos, -1L, "__flush__", 0.0,
+                  Option.empty[String]))
+                .toDF("event_id", "ts", "user_id", "event_type",
+                  "value", "props"),
+              rawSchema("ts").dataType),
+            stage, name, base + offsetSec * 1000L)
+      }
+      stage.toString
     }
     graft.util.EventTs.readEventsStream(spark, dir, staged,
       Map("maxFilesPerTrigger" -> "2"))
@@ -1655,48 +1637,44 @@ object EventOps {
     * from commit-log arithmetic — the three cold files are never
     * opened, not even for footers.
     */
-  /** The skipping gate's staged lake, memoized per (app, dir): the
-    * table layout is deterministic, so it is staged ONCE per process
-    * (prestage in Bench) and the gate times pruning + the pruned scan —
-    * the production split, where the lake already EXISTS and skipping
-    * is the read-side win.
+  /** The skipping gate's staged lake, a shared [[graft.util.Artifacts]]
+    * entry per corpus: the table layout is deterministic, so it is staged
+    * ONCE per session (`SparkEntry.prestage`) and the gate times pruning
+    * + the pruned scan — the production split, where the lake already
+    * EXISTS and skipping is the read-side win.
     */
-  private val skipLakeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def lakeSkippingTable(spark: SparkSession, dir: String): String =
-    skipLakeMemo.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir, _ => {
-        import graft.lake.Snapshots
-        val table = graft.util.Scratch.dir("graft_skip").toString
-        val ev = events(spark, dir).select(col("event_id"),
-          col("user_id"), col("event_type"), col("value"))
-        // ONE ingest producing four range-clustered files — the CLUSTER
-        // BY layout whose per-file stats make skipping effective (a
-        // value-shuffled layout would keep every file). The bands are
-        // EXPLICIT cuts (not repartitionByRange's sampled boundaries,
-        // which only guaranteed one admissible file while the sampler
-        // happened to place the third boundary at or below the
-        // predicate cutoff): the top band starts exactly at the gate
-        // predicate's 320.0, so precisely one file can admit
-        // value >= 320 by construction, at any SF and under any
-        // regenerated fixture. Routing: each band gets a KEY whose
-        // Murmur3 hash lands in its own partition of 4 (hash%4 of
-        // 12/6/2/0 = 0/1/2/3 — fixed seed, engine constant; a
-        // union-of-coalesced/repartitioned legs form would NOT work,
-        // the optimizer collapses per-leg repartitions through Union
-        // to one partition). The require keeps layout drift loud.
-        val bandKey = when(col("value") < 100.0, 12)
-          .when(col("value") < 200.0, 6)
-          .when(col("value") < 320.0, 2)
-          .otherwise(0)
-        Snapshots.append(
-          ev.withColumn("__band", bandKey)
-            .repartition(4, col("__band")).drop("__band"), table)
-        val n = Snapshots.fileStats(table, 1).size
-        require(n == 4, s"skipping fixture expected 4 band files, got $n")
-        table
-      })
+    graft.util.Artifacts.shared(spark, "skip_lake", dir) {
+      import graft.lake.Snapshots
+      val table = graft.util.Scratch.dir("graft_skip").toString
+      val ev = events(spark, dir).select(col("event_id"),
+        col("user_id"), col("event_type"), col("value"))
+      // ONE ingest producing four range-clustered files — the CLUSTER
+      // BY layout whose per-file stats make skipping effective (a
+      // value-shuffled layout would keep every file). The bands are
+      // EXPLICIT cuts (not repartitionByRange's sampled boundaries,
+      // which only guaranteed one admissible file while the sampler
+      // happened to place the third boundary at or below the
+      // predicate cutoff): the top band starts exactly at the gate
+      // predicate's 320.0, so precisely one file can admit
+      // value >= 320 by construction, at any SF and under any
+      // regenerated fixture. Routing: each band gets a KEY whose
+      // Murmur3 hash lands in its own partition of 4 (hash%4 of
+      // 12/6/2/0 = 0/1/2/3 — fixed seed, engine constant; a
+      // union-of-coalesced/repartitioned legs form would NOT work,
+      // the optimizer collapses per-leg repartitions through Union
+      // to one partition). The require keeps layout drift loud.
+      val bandKey = when(col("value") < 100.0, 12)
+        .when(col("value") < 200.0, 6)
+        .when(col("value") < 320.0, 2)
+        .otherwise(0)
+      Snapshots.append(
+        ev.withColumn("__band", bandKey)
+          .repartition(4, col("__band")).drop("__band"), table)
+      val n = Snapshots.fileStats(table, 1).size
+      require(n == 4, s"skipping fixture expected 4 band files, got $n")
+      table
+    }
 
   /** MULTI-dimensional stats skipping — the OPTIMIZE-ZORDER read-side
     * story: a table clustered on TWO dimensions (dense event_id halves
@@ -1709,36 +1687,29 @@ object EventOps {
     * scalar subquery, so the contract holds at every SF). Same band→
     * distinct-hash-partition routing as [[lakeSkippingTable]].
     */
-  private val skip2dMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def lakeSkipping2dTable(spark: SparkSession, dir: String): (String, Long) = {
-    val v = skip2dMemo.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir, _ => {
-        import graft.lake.Snapshots
-        val table = graft.util.Scratch.dir("graft_skip2d").toString
-        val ev = events(spark, dir).select(col("event_id"),
-          col("user_id"), col("event_type"), col("value"))
-        val cut = (ev.agg(max(col("event_id"))).head.getLong(0) + 1L) / 2L
-        // quadrant -> key whose Murmur3 hash%4 is distinct (12/6/2/0 ->
-        // partitions 0/1/2/3; see lakeSkippingTable for why a
-        // union-of-repartitioned legs cannot pin this)
-        val keys = Seq(12, 6, 2, 0)
-        val quadrant =
-          when(col("event_id") < cut && col("value") < 100.0, keys(0))
-            .when(col("event_id") < cut, keys(1))
-            .when(col("value") < 100.0, keys(2))
-            .otherwise(keys(3))
-        Snapshots.append(
-          ev.withColumn("__q", quadrant)
-            .repartition(4, col("__q")).drop("__q"), table)
-        val n = Snapshots.fileStats(table, 1).size
-        require(n == 4, s"2d skipping fixture expected 4 files, got $n")
-        s"$table|$cut"
-      })
-    val Array(table, cut) = v.split('|')
-    (table, cut.toLong)
-  }
+  def lakeSkipping2dTable(spark: SparkSession, dir: String): (String, Long) =
+    graft.util.Artifacts.shared(spark, "skip_lake_2d", dir) {
+      import graft.lake.Snapshots
+      val table = graft.util.Scratch.dir("graft_skip2d").toString
+      val ev = events(spark, dir).select(col("event_id"),
+        col("user_id"), col("event_type"), col("value"))
+      val cut = (ev.agg(max(col("event_id"))).head.getLong(0) + 1L) / 2L
+      // quadrant -> key whose Murmur3 hash%4 is distinct (12/6/2/0 ->
+      // partitions 0/1/2/3; see lakeSkippingTable for why a
+      // union-of-repartitioned legs cannot pin this)
+      val keys = Seq(12, 6, 2, 0)
+      val quadrant =
+        when(col("event_id") < cut && col("value") < 100.0, keys(0))
+          .when(col("event_id") < cut, keys(1))
+          .when(col("value") < 100.0, keys(2))
+          .otherwise(keys(3))
+      Snapshots.append(
+        ev.withColumn("__q", quadrant)
+          .repartition(4, col("__q")).drop("__q"), table)
+      val n = Snapshots.fileStats(table, 1).size
+      require(n == 4, s"2d skipping fixture expected 4 files, got $n")
+      (table, cut)
+    }
 
   def lakeSkipping2d(spark: SparkSession, dir: String): DataFrame = {
     import graft.lake.Snapshots

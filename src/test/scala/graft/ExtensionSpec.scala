@@ -1219,7 +1219,7 @@ class SimilaritySpec extends SparkSpec {
     assert(out.keySet.filter(_ < 1000000L).forall(out(_)))
   }
 
-  test("clearIndexMemo invalidates the shared index after a corpus rewrite") {
+  test("Artifacts.clear invalidates the shared index after a corpus rewrite") {
     import spark.implicits._
     val corpus = graft.util.Scratch.dir("graft_memo_corpus").toString
     def writeCorpus(ids: Seq[Long]): Unit =
@@ -1233,11 +1233,11 @@ class SimilaritySpec extends SparkSpec {
     // rewrite the corpus at the SAME path: the memo key is the path, so
     // without invalidation the stale index would still answer
     writeCorpus(Seq(0L) ++ (100L to 108L))
-    Similarity.clearIndexMemo()
+    graft.util.Artifacts.clear()
     val after = Similarity.lshIndexedReport(spark, corpus).collect()
       .map(_.getLong(0)).toSet
     assert(after.nonEmpty && after.subsetOf((100L to 108L).toSet),
-      s"stale index answered after clearIndexMemo: $after")
+      s"stale index answered after Artifacts.clear: $after")
   }
 
   test("semDedup gate prunes exactly the planted twins") {

@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.util.LruMemo
 
-/** The bounded memo behind `TextDedup.dedupClustersShared`: overflow must
-  * evict exactly the least-recently-used entry, never flush everything
-  * (a full flush would re-pay every consumer's cluster compute at once).
+/** The bounded memo behind `graft.util.Artifacts`: overflow must evict
+  * exactly the least-recently-used entry, never flush everything (a full
+  * flush would re-pay every consumer's artifact compute at once).
   */
 class LruMemoSpec extends AnyFunSuite {
 

@@ -95,6 +95,21 @@ class ScaleSpec extends SparkSpec {
       eq a))
     val b = TextDedup.incrementalBaseShared(spark, dir)
     assert(TextDedup.incrementalBaseShared(spark, dir) eq b)
+    // one registry holds every kind: the same (dir, params) under two
+    // kinds are two artifacts, and the cluster table and the incremental
+    // base, whose parameters are the same, each come back as their own
+    // type (a shared key would hand one the other: a ClassCastException)
+    import graft.util.Artifacts
+    val k1 = Artifacts.shared(spark, "spec_kind_a", dir, 1)(new Object)
+    val k2 = Artifacts.shared(spark, "spec_kind_b", dir, 1)(new Object)
+    assert(!(k1 eq k2))
+    assert(Artifacts.shared(spark, "spec_kind_a", dir, 1)(new Object) eq k1)
+    assert(TextDedup.dedupClustersShared(spark, dir).columns
+      .contains("cluster_id"))
+    assert(TextDedup.incrementalBaseShared(spark, dir) eq b)
+    // clear drops every artifact: the next caller rebuilds
+    Artifacts.clear()
+    assert(!(TextDedup.minhashLshPairsShared(spark, dir) eq a))
   }
 
   test("filters and projections are pushed into the parquet scan") {
