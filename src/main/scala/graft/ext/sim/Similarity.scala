@@ -144,29 +144,92 @@ object Similarity {
     * scans.
     */
   def lshBuckets(spark: SparkSession, dir: String, nBits: Int = 8): DataFrame =
-    emb(spark, dir).withColumn("bucket",
+    withBucket(emb(spark, dir), nBits)
+
+  /** `df` plus its LSH `bucket` column — the one bucket assignment that
+    * the directory index, its appends, the lake layout and the query
+    * side all use.
+    */
+  private def withBucket(df: DataFrame, nBits: Int): DataFrame =
+    df.withColumn("bucket",
       graft.functions.HyperplaneBucket.hyperplane_bucket(col("embedding"), nBits))
 
-  /** THE bucket probe-selection rule (LSH family): all 2^nBits bucket ids
-    * ranked by signature hamming distance to the query's bucket, ties on
-    * the id. One definition shared by the inline and indexed probe paths —
-    * build and probe must rank identically or recall silently craters.
+  /** Corpus vector `id`'s embedding — a query vector, one small
+    * driver-side array (the value any serving query arrives with).
     */
-  private def rankHammingBuckets(qb: Int, nBits: Int,
-      probes: Int): Seq[Int] =
+  private def queryVec(spark: SparkSession, dir: String,
+      id: Long = 0L): Array[Float] =
+    emb(spark, dir).filter(col("vec_id") === id)
+      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
+
+  /** THE bucket probe-selection rule (LSH family): the query vector's
+    * bucket, computed on a one-row literal frame (no corpus scan), then
+    * all 2^nBits bucket ids ranked by signature hamming distance to it,
+    * ties on the id, `probes` nearest kept. One definition shared by the
+    * inline, indexed and lake probe paths — build and probe must rank
+    * identically or recall silently craters.
+    */
+  private def rankHammingBuckets(spark: SparkSession, qVec: Array[Float],
+      nBits: Int, probes: Int): Seq[Int] = {
+    import spark.implicits._
+    val qb = withBucket(Seq(Tuple1(qVec.toSeq)).toDF("embedding"), nBits)
+      .select(col("bucket")).collect().head.getInt(0)
     (0 until (1 << nBits))
       .sortBy(bid => (Integer.bitCount(bid ^ qb), bid))
       .take(probes)
+  }
 
   /** THE list probe-selection rule (IVF family): list ids ranked by
     * squared centroid distance to the query, `nProbe` nearest kept. One
-    * definition shared by all four IVF/IVF-PQ probe paths.
+    * definition shared by all five IVF/IVF-PQ probe paths.
     */
   private def rankProbeLists(centroids: Array[Array[Double]],
-      q: Array[Double], nProbe: Int): Seq[Int] =
+      q: Array[Float], nProbe: Int): Seq[Int] =
     centroids.zipWithIndex.map { case (c, i) =>
       (i, c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
     }.sortBy(_._2).take(nProbe).map(_._1).toSeq
+
+  /** THE scoring tail of every ANN path: the candidate rows cross the
+    * broadcast one-row query literal, cosine rounded to 6 places, top
+    * `k` by (score desc, vec_id asc) — TakeOrderedAndProject, no global
+    * sort. [[bruteForceTopK]] keeps its own copy: it is the reference
+    * the ANN paths are tested against, so it must not share this code.
+    */
+  private def cosineTopK(rows: DataFrame, qVec: Array[Float],
+      k: Int): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.crossJoin(broadcast(Seq(Tuple1(qVec.toSeq)).toDF("query_vec")))
+      .select(col("vec_id"),
+        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
+      .orderBy(col("score").desc, col("vec_id").asc)
+      .limit(k)
+  }
+
+  /** The probe-visible rows of a pruned index scan: `tombstones` (a
+    * directory index's [[indexTombstones]]; None for a lake table, whose
+    * deletes are commits) are broadcast-anti-joined out AFTER pruning,
+    * so partition pruning is untouched, then `excludeVecId` is dropped
+    * (self-query comparisons against brute force).
+    */
+  private def liveRows(pruned: DataFrame, tombstones: Option[DataFrame],
+      excludeVecId: Option[Long]): DataFrame = {
+    val live = tombstones.fold(pruned)(t =>
+      pruned.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    excludeVecId.fold(live)(id => live.filter(col("vec_id") =!= id))
+  }
+
+  /** THE index write: `df` into `indexPath` partitioned by `partCol`,
+    * with `mode` overwrite for a build and append for a maintenance
+    * generation. Repartitioning by the partition column first makes each
+    * task write whole partitions, so a write lands one file per
+    * partition instead of (tasks × partitions) small files — the
+    * standard partitioned-write shape.
+    */
+  private def writePartitioned(df: DataFrame, indexPath: String,
+      partCol: String, mode: String): Unit =
+    df.repartition(col(partCol))
+      .write.mode(mode).partitionBy(partCol).parquet(indexPath)
 
   /** ANN top-k: probe the `probes` buckets nearest (by signature hamming
     * distance) to the query's bucket. With probes = 2^nBits this degrades to
@@ -182,21 +245,11 @@ object Similarity {
     */
   def lshTopK(spark: SparkSession, dir: String, queryVecId: Long = 0L,
       k: Int = 10, nBits: Int = 8, probes: Int = 32): DataFrame = {
-    import spark.implicits._
-    val b = lshBuckets(spark, dir, nBits)
-    val qRow = b.filter(col("vec_id") === queryVecId)
-      .select(col("embedding"), col("bucket")).collect().head
-    val qVec = qRow.getSeq[Float](0)
-    val qb = qRow.getInt(1)
-    val keep = rankHammingBuckets(qb, nBits, probes)
-    val q = broadcast(Seq(Tuple1(qVec)).toDF("query_vec"))
-    b.filter(col("bucket").isin(keep: _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    val qVec = queryVec(spark, dir, queryVecId)
+    val keep = rankHammingBuckets(spark, qVec, nBits, probes)
+    cosineTopK(lshBuckets(spark, dir, nBits)
+      .filter(col("bucket").isin(keep: _*))
+      .filter(col("vec_id") =!= queryVecId), qVec, k)
   }
 
   /** Persist the LSH-bucketed corpus PARTITIONED BY bucket id — the
@@ -208,12 +261,8 @@ object Similarity {
     */
   def writeLshIndex(spark: SparkSession, dir: String, indexPath: String,
       nBits: Int = 8): Unit =
-    // repartition by the partition column first: each task then writes
-    // whole buckets, so the layout is one file per bucket instead of
-    // (tasks × buckets) small files — the standard partitioned-write shape
-    lshBuckets(spark, dir, nBits).repartition(col("bucket"))
-      .write.mode("overwrite")
-      .partitionBy("bucket").parquet(indexPath)
+    writePartitioned(lshBuckets(spark, dir, nBits), indexPath, "bucket",
+      "overwrite")
 
   /** ANN top-k over a persisted [[writeLshIndex]] index, querying by
     * VECTOR (the query need not be in the corpus). The query's bucket is
@@ -236,29 +285,14 @@ object Similarity {
       qVec: Array[Float], k: Int = 10, nBits: Int = 8, probes: Int = 32,
       excludeVecId: Option[Long] = None,
       labelEq: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val qDf = Seq(Tuple1(qVec.toSeq)).toDF("query_vec")
-    val qb = qDf.select(
-      graft.functions.HyperplaneBucket.hyperplane_bucket(col("query_vec"), nBits)
-        .as("qb")).collect().head.getInt(0)
-    val keep = rankHammingBuckets(qb, nBits, probes)
+    val keep = rankHammingBuckets(spark, qVec, nBits, probes)
     val pruned = spark.read.parquet(indexPath)
       .filter(col("bucket").isin(keep: _*))
     // every probe reads the LIVE view: tombstoned vectors are invisible
-    // the moment the delete lands (broadcast anti-join on the tiny
-    // tombstone set, applied AFTER bucket pruning so partition pruning
-    // is untouched); an index with no tombstones takes the plain path
-    val idx = indexTombstones(spark, indexPath).fold(pruned)(t =>
-      pruned.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    val labeled = labelEq.fold(idx)(l => idx.filter(col("label") === l))
-    val probed =
-      excludeVecId.fold(labeled)(id => labeled.filter(col("vec_id") =!= id))
-    probed
-      .crossJoin(broadcast(qDf))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    // the moment the delete lands
+    val labeled = labelEq.fold(pruned)(l => pruned.filter(col("label") === l))
+    cosineTopK(liveRows(labeled, indexTombstones(spark, indexPath),
+      excludeVecId), qVec, k)
   }
 
   /** The gate-config LSH index (nBits = 6), built at most once per
@@ -300,7 +334,7 @@ object Similarity {
   private def sharedIndexReport(spark: SparkSession, dir: String,
       labelEq: Option[Int]): DataFrame =
     gateProbe(spark, sharedLshIndex(spark, dir, nBits = 6),
-      queryVec0(spark, dir), labelEq)
+      queryVec(spark, dir), labelEq)
 
   /** Gate probe configuration shared by every indexed-ANN gate (nBits=6
     * full-probe exactness, vec 0 excluded) — one site to edit, so a gate
@@ -310,13 +344,6 @@ object Similarity {
       qVec: Array[Float], labelEq: Option[Int] = None): DataFrame =
     lshTopKIndexed(spark, indexPath, qVec, nBits = 6, probes = 64,
       excludeVecId = Some(0L), labelEq = labelEq)
-
-  /** Vec 0's embedding — the gates' query vector, one small driver-side
-    * array (the value any serving query arrives with).
-    */
-  private def queryVec0(spark: SparkSession, dir: String): Array[Float] =
-    emb(spark, dir).filter(col("vec_id") === 0L)
-      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
 
   /** Fresh scratch index accreted from `generations` interleaved
     * [[appendLshIndex]] writes (`vec_id mod generations`) — the shared
@@ -341,12 +368,7 @@ object Similarity {
     * counts accrete.
     */
   def appendLshIndex(df: DataFrame, indexPath: String, nBits: Int): Unit =
-    df.withColumn("bucket",
-        graft.functions.HyperplaneBucket.hyperplane_bucket(col("embedding"),
-          nBits))
-      .repartition(col("bucket"))
-      .write.mode("append")
-      .partitionBy("bucket").parquet(indexPath)
+    writePartitioned(withBucket(df, nBits), indexPath, "bucket", "append")
 
   /** Gate for incremental maintenance: the index is built from the EVEN
     * vec_ids, the odd ids arrive later as an [[appendLshIndex]] delta,
@@ -356,7 +378,7 @@ object Similarity {
     */
   def lshIndexAppendReport(spark: SparkSession, dir: String): DataFrame =
     gateProbe(spark, appendedIndex(spark, dir, generations = 2L,
-      prefix = "graft_lsh_index_inc"), queryVec0(spark, dir))
+      prefix = "graft_lsh_index_inc"), queryVec(spark, dir))
 
   /** Serving-lifecycle gate: append generations accrete small files in
     * each `bucket=` directory, and the answer is the LAKE's compactor —
@@ -376,7 +398,7 @@ object Similarity {
     val indexPath = appendedIndex(spark, dir, generations = 2L,
       prefix = "graft_lsh_index_cmp")
     graft.lake.Archive.compact(spark, indexPath, Seq("bucket"))
-    gateProbe(spark, indexPath, queryVec0(spark, dir))
+    gateProbe(spark, indexPath, queryVec(spark, dir))
   }
 
   /** The index's tombstone set, if any: deleted vec_ids live under
@@ -432,8 +454,7 @@ object Similarity {
       partitionCol: String): Unit = {
     val tomb = indexTombstones(spark, indexPath)
     graft.lake.Archive.compact(spark, indexPath, Seq(partitionCol),
-      rewrite = df => tomb.fold(df)(t =>
-        df.join(broadcast(t), Seq("vec_id"), "left_anti")))
+      rewrite = liveRows(_, tomb, None))
   }
 
   /** Lifecycle gate for ANN deletes: build → probe → DELETE the probe's
@@ -454,15 +475,26 @@ object Similarity {
     // (probes = 16 = every bucket), so the oracle is still brute force.
     val indexPath = graft.util.Scratch.dir("graft_lsh_index_del").toString
     writeLshIndex(spark, dir, indexPath, nBits = 4)
-    val q = queryVec0(spark, dir)
-    def probe(): DataFrame =
+    val q = queryVec(spark, dir)
+    deleteLifecycleReport(spark, indexPath, "bucket") {
       lshTopKIndexed(spark, indexPath, q, nBits = 4, probes = 16,
         excludeVecId = Some(0L))
-    val victims = probe()
+    }
+  }
+
+  /** The delete lifecycle both directory layouts gate
+    * ([[lshIndexDeleteReport]], [[ivfIndexDeleteReport]]) over a built
+    * index: `probe` (a full-probe query, so every stage is exact) → delete
+    * its 3 nearest → probe (tombstoned) → reclaim the `partCol`
+    * partitions → probe (compacted).
+    */
+  private def deleteLifecycleReport(spark: SparkSession, indexPath: String,
+      partCol: String)(probe: => DataFrame): DataFrame = {
+    val victims = probe
       .limit(3).collect().map(_.getLong(0)).toSeq   // 3 rows, driver-side
     deleteFromVecIndex(spark, indexPath, victims)
     def stage(name: String, nTomb: Long): DataFrame =
-      probe()
+      probe
         .withColumn("stage", lit(name))
         .withColumn("n_tombstones", lit(nTomb))
         .withColumn("n_index_rows",
@@ -472,13 +504,21 @@ object Similarity {
     val tombstonedDf = spark.createDataFrame(
       java.util.Arrays.asList(tombstoned: _*),
       stage("tombstoned", 0L).schema)
-    lshIndexReclaim(spark, indexPath)
+    indexReclaim(spark, indexPath, partCol)
     require(indexTombstones(spark, indexPath).isEmpty,
       "reclaim must clear the tombstone set")
     tombstonedDf.unionAll(stage("compacted", 0L))
   }
 
   // --- streaming index maintenance (freshness) -----------------------
+
+  /** Files per publication: each file covers a contiguous band of ~8
+    * buckets, so an m-bucket probe keeps ceil(m/8)-ish files. At gate
+    * scale more files would just buy per-file open overhead (the corpus
+    * is small); a production deployment sizes this by target file size
+    * (~512 MB), not bucket count — the skipping math is the same.
+    */
+  private val LakeIndexFiles = 8
 
   /** Bucket-augmented embeddings laid out for file-level skipping: each
     * output partition holds a contiguous RANGE of bucket values
@@ -488,19 +528,8 @@ object Similarity {
     * `bucket` are tight and `Snapshots.prunedScan("bucket IN ...")`
     * skips non-probed buckets at PLAN time.
     */
-  /** Files per publication: each file covers a contiguous band of ~8
-    * buckets, so an m-bucket probe keeps ceil(m/8)-ish files. At gate
-    * scale more files would just buy per-file open overhead (the corpus
-    * is small); a production deployment sizes this by target file size
-    * (~512 MB), not bucket count — the skipping math is the same.
-    */
-  private val LakeIndexFiles = 8
-
   private def withBucketFiles(df: DataFrame, nBits: Int): DataFrame =
-    df.withColumn("bucket",
-        graft.functions.HyperplaneBucket.hyperplane_bucket(col("embedding"),
-          nBits))
-      .repartitionByRange(LakeIndexFiles, col("bucket"))
+    withBucket(df, nBits).repartitionByRange(LakeIndexFiles, col("bucket"))
 
   /** ANN top-k over a LAKE-TABLE index ([[streamAppendLshLake]]'s
     * layout): the probe set prunes FILES through the manifest's
@@ -511,27 +540,24 @@ object Similarity {
   def lshLakeTopK(spark: SparkSession, table: String, qVec: Array[Float],
       k: Int = 10, nBits: Int = 8, probes: Int = 32,
       excludeVecId: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val qDf = Seq(Tuple1(qVec.toSeq)).toDF("query_vec")
-    val qb = qDf.select(
-      graft.functions.HyperplaneBucket.hyperplane_bucket(col("query_vec"),
-        nBits).as("qb")).collect().head.getInt(0)
-    val keep = rankHammingBuckets(qb, nBits, probes)
-    val idx = graft.lake.Snapshots.prunedScan(spark, table,
-      s"bucket IN (${keep.mkString(", ")})")
-    val probed =
-      excludeVecId.fold(idx)(id => idx.filter(col("vec_id") =!= id))
-    probed
-      .crossJoin(broadcast(qDf))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    val keep = rankHammingBuckets(spark, qVec, nBits, probes)
+    cosineTopK(liveRows(graft.lake.Snapshots.prunedScan(spark, table,
+      s"bucket IN (${keep.mkString(", ")})"), None, excludeVecId), qVec, k)
   }
 
-  /** One EXACTLY-ONCE streaming-append session into the lake-table
-    * index: every staged file not yet in the checkpoint becomes one
-    * micro-batch, published through
+  /** One EXACTLY-ONCE streaming-append session into the LSH lake-table
+    * index: [[streamAppendLake]] with the [[withBucketFiles]] layout.
+    */
+  def streamAppendLshLake(spark: SparkSession, stageDir: String,
+      checkpoint: String, table: String, nBits: Int,
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    streamAppendLake(spark, stageDir, checkpoint, table, schema)(
+      withBucketFiles(_, nBits))
+
+  /** One EXACTLY-ONCE streaming-append session into a lake-table index,
+    * shared by both lake layouts (`layout` turns a micro-batch of corpus
+    * rows into index rows): every staged file not yet in the checkpoint
+    * becomes one micro-batch, published through
     * [[graft.lake.Snapshots.appendBatchRetry]]'s batch-id high-water
     * mark — Structured Streaming's at-least-once foreachBatch delivery
     * degrades to exactly-once because a redelivered id no-ops against
@@ -543,9 +569,10 @@ object Similarity {
     * SAME checkpoint — a restart that must resume exactly past the
     * published batches.
     */
-  def streamAppendLshLake(spark: SparkSession, stageDir: String,
-      checkpoint: String, table: String, nBits: Int,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
+  private def streamAppendLake(spark: SparkSession, stageDir: String,
+      checkpoint: String, table: String,
+      schema: org.apache.spark.sql.types.StructType)(
+      layout: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.streaming.Trigger
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir)
@@ -554,7 +581,7 @@ object Similarity {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (bdf: DataFrame, bid: Long) =>
         import graft.lake.Snapshots
-        val delta = withBucketFiles(bdf, nBits)
+        val delta = layout(bdf)
         val published = Snapshots.appendBatchRetry(delta, table, bid)
           .isDefined || Snapshots.lastBatchId(table).exists(_ >= bid)
         require(published, s"index batch $bid was not published")
@@ -564,24 +591,6 @@ object Similarity {
       }
       .start()
     q.awaitTermination()
-  }
-
-  /** EventOps' single-file stager, index-side copy: write `df` as ONE
-    * parquet file under `stage/name` with a pinned mtime so the file
-    * stream's discovery order is deterministic.
-    */
-  private def stageVecFile(df: DataFrame, stage: java.nio.file.Path,
-      name: String, mtimeMillis: Long): Unit = {
-    val tmp = graft.util.Scratch.dir(s"graft_vecstage_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = new java.io.File(tmp.toString).listFiles()
-      .find(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part file written under $tmp"))
-    val dest = stage.resolve(name)
-    java.nio.file.Files.move(part.toPath, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
   }
 
   /** STREAMING index maintenance gate — the freshness rung the index
@@ -595,53 +604,62 @@ object Similarity {
     * appends — the composition the verdict asked for
     * ([[graft.lake.Snapshots.appendBatch]] under foreachBatch, the
     * p_stream_sink_lake / p_wire_restart pattern on the index layout).
-    *
-    * Fixture: even vec_ids bootstrap v1; the odd ids arrive as two
-    * staged files drained by TWO AvailableNow sessions over ONE
-    * checkpoint — the second session is a mid-stream restart that must
-    * resume past batch 0 without re-publishing it. Every batch also
-    * re-delivers itself inside foreachBatch (must no-op), and a
-    * post-hoc redelivery of the final batch id must still no-op.
-    * Contract columns: full-probe top-10 (= brute force over the WHOLE
-    * corpus — a lost or doubled streamed vector shifts it),
-    * `n_versions` pinned to bootstrap + one version per batch, and the
-    * odd-id row count + id-sum (each streamed row exactly once).
+    * The fixture and contract columns are [[lakeStreamReport]]'s.
     * Solo floor ~3 s: two AvailableNow drain cycles + three lake
     * publications — the same class as p_stream_sink_lake (SCALE.md
     * floor table).
     */
   def lshIndexStreamReport(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.Snapshots
     val nBits = 6
+    lakeStreamReport(spark, dir, "graft_lsh_lake", withBucketFiles(_, nBits)) {
+      (table, _) => lshLakeTopK(spark, table, queryVec(spark, dir), k = 10,
+        nBits = nBits, probes = 64, excludeVecId = Some(0L))
+    }
+  }
+
+  /** The streaming-maintenance fixture both lake layouts gate
+    * ([[lshIndexStreamReport]], [[ivfPqIndexStreamReport]]), through
+    * [[streamAppendLake]] with the layout's `layout` transform: even
+    * vec_ids bootstrap v1; the odd ids arrive as two staged files
+    * drained by TWO AvailableNow sessions over ONE checkpoint — the
+    * second session is a mid-stream restart that must resume past batch
+    * 0 without re-publishing it. Every batch also re-delivers itself
+    * inside foreachBatch (must no-op), and a post-hoc redelivery of the
+    * final batch id must still no-op. Contract columns: `probe(table,
+    * n_rows)`'s full-probe top-10 (= brute force over the WHOLE corpus —
+    * a lost or doubled streamed vector shifts it), `n_versions` pinned
+    * to bootstrap + one version per batch, and the odd-id row count +
+    * id-sum (each streamed row exactly once).
+    */
+  private def lakeStreamReport(spark: SparkSession, dir: String,
+      prefix: String, layout: DataFrame => DataFrame)(
+      probe: (String, Long) => DataFrame): DataFrame = {
+    import graft.lake.Snapshots
+    import graft.util.Scratch
     val e = emb(spark, dir)
-    val table = graft.util.Scratch.dir("graft_lsh_lake").toString
-    Snapshots.append(withBucketFiles(e.filter(col("vec_id") % 2 === 0),
-      nBits), table)
-    val stage = graft.util.Scratch.dir("graft_lsh_lake_src")
-    val ck = graft.util.Scratch.dir("graft_lsh_lake_ck").toString
+    val table = Scratch.dir(prefix).toString
+    Snapshots.append(layout(e.filter(col("vec_id") % 2 === 0)), table)
+    val stage = Scratch.dir(s"${prefix}_src")
+    val ck = Scratch.dir(s"${prefix}_ck").toString
     val base = System.currentTimeMillis()
-    stageVecFile(e.filter(pmod(col("vec_id"), lit(4)) === 1), stage,
-      "g1.parquet", base)
-    streamAppendLshLake(spark, stage.toString, ck, table, nBits, e.schema)
-    require(Snapshots.lastBatchId(table).contains(0L),
-      "first session must have published exactly batch 0")
-    // the second file lands AFTER the first session stopped: the
-    // restarted session must resume from the checkpoint (batch 1),
-    // never re-deliver batch 0's rows
-    stageVecFile(e.filter(pmod(col("vec_id"), lit(4)) === 3), stage,
-      "g2.parquet", base + 60000)
-    streamAppendLshLake(spark, stage.toString, ck, table, nBits, e.schema)
-    // post-hoc redelivery of the final batch id: still a no-op
-    require(Snapshots.appendBatch(withBucketFiles(e.limit(1), nBits),
-        table, 1L).isEmpty,
+    // each file lands AFTER the previous session stopped: the restarted
+    // session must resume from the checkpoint, never re-deliver an
+    // earlier batch's rows
+    Seq(1, 3).zipWithIndex.foreach { case (slice, batch) =>
+      Scratch.stageParquetFile(e.filter(pmod(col("vec_id"), lit(4)) === slice),
+        stage, s"g${batch + 1}.parquet", base + batch * 60000L)
+      streamAppendLake(spark, stage.toString, ck, table, e.schema)(layout)
+      require(Snapshots.lastBatchId(table).contains(batch.toLong),
+        s"session ${batch + 1} must have published exactly through batch $batch")
+    }
+    require(Snapshots.appendBatch(layout(e.limit(1)), table, 1L).isEmpty,
       "redelivered final batch must no-op against the high-water mark")
     val counters = Snapshots.read(spark, table).agg(
       count(lit(1)).as("n"),
       count(when(pmod(col("vec_id"), lit(2)) === 1, 1)).as("odd"),
       sum(when(pmod(col("vec_id"), lit(2)) === 1, col("vec_id")))
         .as("osum")).collect().head
-    lshLakeTopK(spark, table, queryVec0(spark, dir), k = 10,
-        nBits = nBits, probes = 64, excludeVecId = Some(0L))
+    probe(table, counters.getLong(0))
       .withColumn("n_versions", lit(Snapshots.latestVersion(table).toLong))
       .withColumn("n_rows", lit(counters.getLong(0)))
       .withColumn("odd_rows", lit(counters.getLong(1)))
@@ -680,7 +698,7 @@ object Similarity {
       count(lit(1)).as("n"),
       sum(col("vec_id")).as("idsum")).collect().head
     val (kept, all) = Snapshots.pruneFiles(spark, table, "bucket IN (0, 1)")
-    lshLakeTopK(spark, table, queryVec0(spark, dir), k = 10,
+    lshLakeTopK(spark, table, queryVec(spark, dir), k = 10,
         nBits = nBits, probes = 64, excludeVecId = Some(0L))
       .withColumn("n_versions", lit(Snapshots.latestVersion(table).toLong))
       .withColumn("n_rows", lit(counters.getLong(0)))
@@ -689,24 +707,19 @@ object Similarity {
   }
 
   /** IVF-PQ rows laid out for file-level skipping, the [[withBucketFiles]]
-    * analog on the learned-quantizer layout: list assignment against the
-    * RESIDENT centroids (a fixed broadcast artifact — the IVF maintenance
-    * invariant, [[appendIvfIndex]]) plus PQ encoding against the resident
-    * codebooks, stored as `(vec_id, codes tinyint, ivf_list)` — codes
-    * ONLY, the billion-scale serving artifact ([[writeIvfPqIndex]]); raw
-    * vectors stay in the corpus and are fetched just for the rerank
-    * survivors. `repartitionByRange` on `ivf_list` keeps each published
-    * file's manifest min/max on the list id tight, so a probe of
-    * `nProbe` lists is a plan-time file prune — the manifest does what
-    * `ivf_list=` directories do, with a commit protocol directories
-    * can't have.
+    * analog on the learned-quantizer layout: [[ivfPqCodes]] against the
+    * RESIDENT centroids and codebooks (fixed broadcast artifacts — the
+    * IVF maintenance invariant, [[appendIvfIndex]]); raw vectors stay in
+    * the corpus and are fetched just for the rerank survivors.
+    * `repartitionByRange` on `ivf_list` keeps each published file's
+    * manifest min/max on the list id tight, so a probe of `nProbe` lists
+    * is a plan-time file prune — the manifest does what `ivf_list=`
+    * directories do, with a commit protocol directories can't have.
     */
   private def withIvfListFiles(df: DataFrame,
       centroids: Array[Array[Double]],
       cb: Array[Array[Array[Double]]]): DataFrame =
-    pqEncodeDf(ivfAssignOf(df, centroids), cb)
-      .select(col("vec_id"), col("codes").cast("array<tinyint>").as("codes"),
-        col("ivf_list"))
+    ivfPqCodes(df, centroids, cb)
       .repartitionByRange(LakeIndexFiles, col("ivf_list"))
 
   /** IVF-PQ top-k over a LAKE-TABLE index ([[streamAppendIvfPqLake]]'s
@@ -721,125 +734,58 @@ object Similarity {
       centroids: Array[Array[Double]], cb: Array[Array[Array[Double]]],
       qVec: Array[Float], k: Int = 10, nProbe: Int = 4, rerank: Int = 400,
       excludeVecId: Option[Long] = None): DataFrame = {
-    val qd = qVec.map(_.toDouble)
-    val probeLists = rankProbeLists(centroids, qd, nProbe)
+    val probeLists = rankProbeLists(centroids, qVec, nProbe)
     val idx = graft.lake.Snapshots.prunedScan(spark, table,
       s"ivf_list IN (${probeLists.mkString(", ")})")
-    val probed = excludeVecId.fold(idx)(id => idx.filter(col("vec_id") =!= id))
-    val cand = probed
-      .select(col("vec_id"), adcCosine(cb, qd).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(rerank)
-    import spark.implicits._
-    val q = broadcast(Seq(Tuple1(qVec.toSeq)).toDF("query_vec"))
-    cand.join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    adcRerankTopK(liveRows(idx, None, excludeVecId), corpus, cb, qVec, k,
+      rerank)
   }
 
   /** [[streamAppendLshLake]] on the IVF-PQ layout — the index-freshness
     * asymmetry the r13 verdict flagged (streaming exactly-once appends
-    * existed for the LSH lake layout only). Same machinery end to end:
-    * each staged file becomes one micro-batch, the foreachBatch body
-    * assigns lists + PQ-encodes against the RESIDENT quantizer (both
-    * are fixed broadcast artifacts, so the transform is a narrow
-    * per-row pass — no refit, no resident rewrite), and publishes
-    * through [[graft.lake.Snapshots.appendBatchRetry]]'s batch-id
-    * high-water mark. Every batch re-delivers itself (must no-op) —
-    * the p_stream_sink_lake contract; `Trigger.AvailableNow` lets a
-    * caller stage more files and re-enter with the SAME checkpoint as
-    * a mid-stream restart.
+    * existed for the LSH lake layout only). Same machinery end to end
+    * ([[streamAppendLake]]): the layout transform assigns lists +
+    * PQ-encodes against the RESIDENT quantizer (both are fixed broadcast
+    * artifacts, so the transform is a narrow per-row pass — no refit, no
+    * resident rewrite).
     */
   def streamAppendIvfPqLake(spark: SparkSession, stageDir: String,
       checkpoint: String, table: String,
       centroids: Array[Array[Double]], cb: Array[Array[Array[Double]]],
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (bdf: DataFrame, bid: Long) =>
-        import graft.lake.Snapshots
-        val delta = withIvfListFiles(bdf, centroids, cb)
-        val published = Snapshots.appendBatchRetry(delta, table, bid)
-          .isDefined || Snapshots.lastBatchId(table).exists(_ >= bid)
-        require(published, s"index batch $bid was not published")
-        val again = Snapshots.appendBatch(delta, table, bid)
-        require(again.isEmpty, s"duplicate index batch $bid published twice")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    streamAppendLake(spark, stageDir, checkpoint, table, schema)(
+      withIvfListFiles(_, centroids, cb))
 
   /** STREAMING maintenance gate for the IVF-PQ layout — closes the
     * freshness asymmetry ([[lshIndexStreamReport]]'s contract on the
-    * second index layout, the r13 verdict's #1 ask). Fixture mirrors
-    * x_ann_stream exactly: even vec_ids bootstrap v1 (and fit the IVF
-    * centroids, so streamed rows exercise STALE-quantizer assignment,
-    * the [[ivfIndexAppendReport]] honesty); the odd ids arrive as two
-    * staged files drained by TWO AvailableNow sessions over ONE
-    * checkpoint (the second IS a mid-stream restart that must resume
-    * past batch 0), every batch self-redelivers inside foreachBatch
-    * (must no-op), and a post-hoc redelivery of the final batch id
-    * must still no-op. Contract columns: full-probe top-10 (= brute
-    * force over the WHOLE corpus — the exact re-rank over a
-    * corpus-covering candidate pool makes ADC ranking error
-    * irrelevant; a lost or doubled streamed vector still shifts it),
-    * `n_versions` = bootstrap + one per batch, and the odd-id row
-    * count + id-sum over the INDEX table (each streamed row exactly
-    * once). PQ codebooks come from the corpus-level `pq_fit` artifact (shared
-    * with the other PQ gates — the codebook is ADC-ranking-only here,
-    * never correctness). Solo floor ~3–5 s: two AvailableNow drain
-    * cycles + three lake publications, the x_ann_stream class
-    * (SCALE.md floor table).
+    * second index layout, the r13 verdict's #1 ask), through the same
+    * [[lakeStreamReport]] fixture. The IVF centroids are fit on the
+    * bootstrap (even) ids only, so streamed rows exercise STALE-quantizer
+    * assignment (the [[ivfIndexAppendReport]] honesty). The full-probe
+    * top-10 re-ranks a corpus-covering candidate pool, which makes ADC
+    * ranking error irrelevant; a lost or doubled streamed vector still
+    * shifts it. PQ codebooks come from the corpus-level `pq_fit` artifact
+    * (shared with the other PQ gates — the codebook is ADC-ranking-only
+    * here, never correctness). Solo floor ~3–5 s: two AvailableNow drain
+    * cycles + three lake publications, the x_ann_stream class (SCALE.md
+    * floor table).
     */
   def ivfPqIndexStreamReport(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.Snapshots
     val nLists = 16
     val e = emb(spark, dir)
-    val resident = e.filter(col("vec_id") % 2 === 0)
-    val centroids = ivfFitCentroidsOf(resident, k = nLists)
+    val centroids = ivfFitCentroidsOf(e.filter(col("vec_id") % 2 === 0),
+      k = nLists)
     val cb = pqFitCodebooks(spark, dir)
-    val table = graft.util.Scratch.dir("graft_ivfpq_lake").toString
-    Snapshots.append(withIvfListFiles(resident, centroids, cb), table)
-    val stage = graft.util.Scratch.dir("graft_ivfpq_lake_src")
-    val ck = graft.util.Scratch.dir("graft_ivfpq_lake_ck").toString
-    val base = System.currentTimeMillis()
-    stageVecFile(e.filter(pmod(col("vec_id"), lit(4)) === 1), stage,
-      "g1.parquet", base)
-    streamAppendIvfPqLake(spark, stage.toString, ck, table, centroids, cb,
-      e.schema)
-    require(Snapshots.lastBatchId(table).contains(0L),
-      "first session must have published exactly batch 0")
-    stageVecFile(e.filter(pmod(col("vec_id"), lit(4)) === 3), stage,
-      "g2.parquet", base + 60000)
-    streamAppendIvfPqLake(spark, stage.toString, ck, table, centroids, cb,
-      e.schema)
-    require(Snapshots.appendBatch(
-        withIvfListFiles(e.limit(1), centroids, cb), table, 1L).isEmpty,
-      "redelivered final batch must no-op against the high-water mark")
-    val counters = Snapshots.read(spark, table).agg(
-      count(lit(1)).as("n"),
-      count(when(pmod(col("vec_id"), lit(2)) === 1, 1)).as("odd"),
-      sum(when(pmod(col("vec_id"), lit(2)) === 1, col("vec_id")))
-        .as("osum")).collect().head
-    // rerank ≥ the full corpus: the candidate pool IS the probed index,
-    // so the exact re-rank equals brute force no matter how the
-    // stale-ish codebook orders the ADC pass — the gate pins streaming
-    // delivery, not ADC recall (x_ann_pq/x_ann_ivfpq own that)
-    val poolSize = counters.getLong(0).toInt
-    ivfPqLakeTopK(spark, table, e, centroids, cb, queryVec0(spark, dir),
-        k = 10, nProbe = nLists, rerank = poolSize, excludeVecId = Some(0L))
-      .withColumn("n_versions", lit(Snapshots.latestVersion(table).toLong))
-      .withColumn("n_rows", lit(counters.getLong(0)))
-      .withColumn("odd_rows", lit(counters.getLong(1)))
-      .withColumn("odd_sum", lit(counters.getLong(2)))
+    lakeStreamReport(spark, dir, "graft_ivfpq_lake",
+        withIvfListFiles(_, centroids, cb)) { (table, nRows) =>
+      // rerank ≥ the full index: the candidate pool IS the probed index,
+      // so the exact re-rank equals brute force no matter how the
+      // stale-ish codebook orders the ADC pass — the gate pins streaming
+      // delivery, not ADC recall (x_ann_pq/x_ann_ivfpq own that)
+      ivfPqLakeTopK(spark, table, e, centroids, cb, queryVec(spark, dir),
+        k = 10, nProbe = nLists, rerank = nRows.toInt,
+        excludeVecId = Some(0L))
+    }
   }
 
   /** Embedding-cosine near-duplicate pairs: candidates from LSH bucket
@@ -1105,27 +1051,13 @@ object Similarity {
     */
   def ivfTopK(spark: SparkSession, dir: String, queryVecId: Long = 0L,
       k: Int = 10, nLists: Int = 16, nProbe: Int = 4): DataFrame = {
-    import spark.implicits._
     val centroids = ivfFitCentroids(spark, dir, nLists)
-    val assigned = ivfAssign(spark, dir, centroids)
-    val qRow = assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("query_vec")).collect().head
-    val qSeq = qRow.getSeq[Float](0)
-    val qVec = qSeq.map(_.toDouble).toArray
+    val qVec = queryVec(spark, dir, queryVecId)
     // rank lists by centroid distance to the query, driver-side (k floats)
     val probeLists = rankProbeLists(centroids, qVec, nProbe)
-    // the collected vector backs a literal one-row frame — re-filtering
-    // `assigned` for it would scan (and centroid-assign) the whole corpus
-    // a second time just to re-find a row already in hand (pqTopK's shape)
-    val q = broadcast(Seq(Tuple1(qSeq)).toDF("query_vec"))
-    assigned
+    cosineTopK(ivfAssign(spark, dir, centroids)
       .filter(col("ivf_list").isin(probeLists: _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+      .filter(col("vec_id") =!= queryVecId), qVec, k)
   }
 
   /** Persist the IVF-assigned corpus PARTITIONED BY list id — the
@@ -1137,35 +1069,23 @@ object Similarity {
   def writeIvfIndex(spark: SparkSession, dir: String, indexPath: String,
       nLists: Int = 16): Array[Array[Double]] = {
     val centroids = ivfFitCentroids(spark, dir, nLists)
-    ivfAssign(spark, dir, centroids).repartition(col("ivf_list"))
-      .write.mode("overwrite")
-      .partitionBy("ivf_list").parquet(indexPath)
+    writePartitioned(ivfAssign(spark, dir, centroids), indexPath, "ivf_list",
+      "overwrite")
     centroids
   }
 
   /** IVF top-k over a persisted [[writeIvfIndex]] index, querying by
     * vector: lists ranked by centroid distance driver-side, the literal
-    * list set lands in the scan's PartitionFilters.
+    * list set lands in the scan's PartitionFilters; tombstoned vectors
+    * are invisible (the LSH probe's live view).
     */
   def ivfTopKIndexed(spark: SparkSession, indexPath: String,
       centroids: Array[Array[Double]], qVec: Array[Float], k: Int = 10,
       nProbe: Int = 4, excludeVecId: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val probeLists = rankProbeLists(centroids, qVec.map(_.toDouble), nProbe)
-    val qDf = Seq(Tuple1(qVec.toSeq)).toDF("query_vec")
     val pruned = spark.read.parquet(indexPath)
-      .filter(col("ivf_list").isin(probeLists: _*))
-    // live view: tombstoned vectors invisible (same contract as the LSH
-    // probe); no-tombstone indexes take the plain path
-    val idx = indexTombstones(spark, indexPath).fold(pruned)(t =>
-      pruned.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    val probed = excludeVecId.fold(idx)(id => idx.filter(col("vec_id") =!= id))
-    probed
-      .crossJoin(broadcast(qDf))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+      .filter(col("ivf_list").isin(rankProbeLists(centroids, qVec, nProbe): _*))
+    cosineTopK(liveRows(pruned, indexTombstones(spark, indexPath),
+      excludeVecId), qVec, k)
   }
 
   /** Append a delta of vectors to an existing [[writeIvfIndex]] index
@@ -1179,10 +1099,8 @@ object Similarity {
     */
   def appendIvfIndex(df: DataFrame, indexPath: String,
       centroids: Array[Array[Double]]): Unit =
-    ivfAssignOf(df, centroids)
-      .repartition(col("ivf_list"))
-      .write.mode("append")
-      .partitionBy("ivf_list").parquet(indexPath)
+    writePartitioned(ivfAssignOf(df, centroids), indexPath, "ivf_list",
+      "append")
 
   /** Gate for IVF incremental maintenance (the [[lshIndexAppendReport]]
     * twin): centroids fit once, index built from the EVEN vec_ids, odd
@@ -1199,20 +1117,16 @@ object Similarity {
     val centroids = ivfFitCentroidsOf(e.filter(col("vec_id") % 2 === 0), k = 16)
     appendIvfIndex(e.filter(col("vec_id") % 2 === 0), indexPath, centroids)
     appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), indexPath, centroids)
-    val qVec = e.filter(col("vec_id") === 0L)
-      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
-    ivfTopKIndexed(spark, indexPath, centroids, qVec, nProbe = 16,
-      excludeVecId = Some(0L))
+    ivfTopKIndexed(spark, indexPath, centroids, queryVec(spark, dir),
+      nProbe = 16, excludeVecId = Some(0L))
   }
 
   /** Gated indexed-IVF report: full-probe config ≡ brute force. */
   def ivfIndexedReport(spark: SparkSession, dir: String): DataFrame = {
     val indexPath = graft.util.Scratch.dir("graft_ivf_index").toString
     val centroids = writeIvfIndex(spark, dir, indexPath, nLists = 16)
-    val qVec = emb(spark, dir).filter(col("vec_id") === 0L)
-      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
-    ivfTopKIndexed(spark, indexPath, centroids, qVec, nProbe = 16,
-      excludeVecId = Some(0L))
+    ivfTopKIndexed(spark, indexPath, centroids, queryVec(spark, dir),
+      nProbe = 16, excludeVecId = Some(0L))
   }
 
   /** [[lshIndexDeleteReport]] for the IVF layout — the same
@@ -1226,28 +1140,11 @@ object Similarity {
   def ivfIndexDeleteReport(spark: SparkSession, dir: String): DataFrame = {
     val indexPath = graft.util.Scratch.dir("graft_ivf_index_del").toString
     val centroids = writeIvfIndex(spark, dir, indexPath, nLists = 8)
-    val q = queryVec0(spark, dir)
-    def probe(): DataFrame =
+    val q = queryVec(spark, dir)
+    deleteLifecycleReport(spark, indexPath, "ivf_list") {
       ivfTopKIndexed(spark, indexPath, centroids, q, nProbe = 8,
         excludeVecId = Some(0L))
-    val victims = probe()
-      .limit(3).collect().map(_.getLong(0)).toSeq   // 3 rows, driver-side
-    deleteFromVecIndex(spark, indexPath, victims)
-    def stage(name: String, nTomb: Long): DataFrame =
-      probe()
-        .withColumn("stage", lit(name))
-        .withColumn("n_tombstones", lit(nTomb))
-        .withColumn("n_index_rows",
-          lit(spark.read.parquet(indexPath).count()))
-    val tombstoned = stage("tombstoned", victims.size.toLong)
-      .collect()                                    // pin BEFORE reclaim
-    val tombstonedDf = spark.createDataFrame(
-      java.util.Arrays.asList(tombstoned: _*),
-      stage("tombstoned", 0L).schema)
-    ivfIndexReclaim(spark, indexPath)
-    require(indexTombstones(spark, indexPath).isEmpty,
-      "reclaim must clear the tombstone set")
-    tombstonedDf.unionAll(stage("compacted", 0L))
+    }
   }
 
   /** Product-quantization codebooks: the vector space is split into `m`
@@ -1306,8 +1203,7 @@ object Similarity {
   /** The ADC approximate-cosine column over a `codes` column: per-subspace
     * lookup tables (dot product and squared norm of every codebook entry —
     * m × codes doubles, computed driver-side) reconstruct cosine per row
-    * from `m` literal-array lookups, never touching raw floats. Shared by
-    * [[pqTopK]] and [[ivfPqTopK]].
+    * from `m` literal-array lookups, never touching raw floats.
     */
   private def adcCosine(cb: Array[Array[Array[Double]]],
       qVec: Array[Double]): org.apache.spark.sql.Column = {
@@ -1324,6 +1220,17 @@ object Similarity {
     // method past the JIT's 8 KB limit (interpreted: ~10x slower)
     graft.functions.PqOps.pq_adc_cosine(col("codes"), dotTab, normTab, qNorm)
   }
+
+  /** THE ADC candidate pass of the PQ family: score `rows`' codes by
+    * [[adcCosine]] and keep the top `rerank` by (adc desc, vec_id asc)
+    * for the exact re-rank, with `carry` riding along beside vec_id.
+    */
+  private def adcCandidates(rows: DataFrame, cb: Array[Array[Array[Double]]],
+      qVec: Array[Float], rerank: Int, carry: Column*): DataFrame =
+    rows.select((col("vec_id") +: carry) :+
+        adcCosine(cb, qVec.map(_.toDouble)).as("adc"): _*)
+      .orderBy(col("adc").desc, col("vec_id").asc)
+      .limit(rerank)
 
   /** PQ ANN top-k by asymmetric distance computation (ADC) + exact re-rank:
     * the query precomputes per-subspace lookup tables (dot product and
@@ -1342,27 +1249,13 @@ object Similarity {
   def pqTopK(spark: SparkSession, dir: String, queryVecId: Long = 0L,
       k: Int = 10, m: Int = 16, codes: Int = 128, rerank: Int = 400): DataFrame = {
     val cb = pqFitCodebooks(spark, dir, m, codes)
-    val enc = pqEncode(spark, dir, cb)
-    val qVec = emb(spark, dir).filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect().head
-      .getSeq[Float](0).map(_.toDouble).toArray
+    val qVec = queryVec(spark, dir, queryVecId)
     // the embedding rides through the ADC top-`rerank` selection
     // (TakeOrderedAndProject keeps `rerank` rows per partition), so the
-    // exact re-rank needs no join back to the corpus; the query vector is
-    // already on the driver, so it broadcasts as a literal-backed frame
-    // instead of a second scan
-    import spark.implicits._
-    val q = broadcast(Seq(Tuple1(qVec.map(_.toFloat).toSeq))
-      .toDF("query_vec"))
-    enc.filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"), col("embedding"), adcCosine(cb, qVec).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(rerank)
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    // exact re-rank needs no join back to the corpus
+    cosineTopK(adcCandidates(pqEncode(spark, dir, cb)
+      .filter(col("vec_id") =!= queryVecId), cb, qVec, rerank,
+      col("embedding")), qVec, k)
   }
 
   /** IVF-PQ: the composition the [[pqTopK]] scaladoc promises — IVF list
@@ -1380,26 +1273,29 @@ object Similarity {
       codes: Int = 128, rerank: Int = 400): DataFrame = {
     val centroids = ivfFitCentroids(spark, dir, nLists)
     val cb = pqFitCodebooks(spark, dir, m, codes)
-    val enc = pqEncodeDf(ivfAssign(spark, dir, centroids), cb)
-    val qVec = emb(spark, dir).filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect().head
-      .getSeq[Float](0).map(_.toDouble).toArray
+    val qVec = queryVec(spark, dir, queryVecId)
     // rank lists by centroid distance to the query, driver-side (k floats)
     val probeLists = rankProbeLists(centroids, qVec, nProbe)
-    import spark.implicits._
-    val q = broadcast(Seq(Tuple1(qVec.map(_.toFloat).toSeq))
-      .toDF("query_vec"))
-    enc.filter(col("ivf_list").isin(probeLists: _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"), col("embedding"), adcCosine(cb, qVec).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(rerank)
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    cosineTopK(adcCandidates(pqEncodeDf(ivfAssign(spark, dir, centroids), cb)
+      .filter(col("ivf_list").isin(probeLists: _*))
+      .filter(col("vec_id") =!= queryVecId), cb, qVec, rerank,
+      col("embedding")), qVec, k)
   }
+
+  /** `df` assigned to IVF lists and PQ-encoded, stored as `(vec_id, codes
+    * tinyint, ivf_list)` — codes ONLY, the billion-scale serving row that
+    * the directory index ([[writeIvfPqIndex]]) and the lake layout
+    * ([[withIvfListFiles]]) both hold. Codes are tinyint because PQ's
+    * whole point is byte codes and the int-array form would quadruple the
+    * index's scan bytes (code values are < `codes` <= 128 by
+    * construction, so the cast is lossless; the ADC lookup arithmetic
+    * widens back to int transparently).
+    */
+  private def ivfPqCodes(df: DataFrame, centroids: Array[Array[Double]],
+      cb: Array[Array[Array[Double]]]): DataFrame =
+    pqEncodeDf(ivfAssignOf(df, centroids), cb)
+      .select(col("vec_id"), col("codes").cast("array<tinyint>").as("codes"),
+        col("ivf_list"))
 
   /** Persist the IVF-PQ composition as an index — the billion-scale ANN
     * serving artifact: `ivf_list`-partitioned parquet of `(vec_id,
@@ -1416,15 +1312,8 @@ object Similarity {
     require(codes <= 128, s"tinyint code storage needs codes <= 128, got $codes")
     val centroids = ivfFitCentroids(spark, dir, nLists)
     val cb = pqFitCodebooks(spark, dir, m, codes)
-    // store codes as tinyint: PQ's whole point is byte codes, and the
-    // int-array form would quadruple the index's scan bytes (code values
-    // are < `codes` <= 128 by construction, so the cast is lossless; the
-    // ADC lookup arithmetic widens back to int transparently)
-    pqEncodeDf(ivfAssign(spark, dir, centroids), cb)
-      .select(col("vec_id"), col("codes").cast("array<tinyint>").as("codes"),
-        col("ivf_list"))
-      .repartition(col("ivf_list"))
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(indexPath)
+    writePartitioned(ivfPqCodes(emb(spark, dir), centroids, cb), indexPath,
+      "ivf_list", "overwrite")
     (centroids, cb)
   }
 
@@ -1441,24 +1330,22 @@ object Similarity {
       cb: Array[Array[Array[Double]]], qVec: Array[Float], k: Int = 10,
       nProbe: Int = 4, rerank: Int = 400,
       excludeVecId: Option[Long] = None): DataFrame = {
-    val qd = qVec.map(_.toDouble)
-    val probeLists = rankProbeLists(centroids, qd, nProbe)
-    val idx = spark.read.parquet(indexPath)
-      .filter(col("ivf_list").isin(probeLists: _*))
-    val probed = excludeVecId.fold(idx)(id => idx.filter(col("vec_id") =!= id))
-    val cand = probed
-      .select(col("vec_id"), adcCosine(cb, qd).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(rerank)
-    import spark.implicits._
-    val q = broadcast(Seq(Tuple1(qVec.toSeq)).toDF("query_vec"))
-    cand.join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(q)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("query_vec")), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    val pruned = spark.read.parquet(indexPath)
+      .filter(col("ivf_list").isin(rankProbeLists(centroids, qVec, nProbe): _*))
+    adcRerankTopK(liveRows(pruned, None, excludeVecId), corpus, cb, qVec, k,
+      rerank)
   }
+
+  /** The codes-only read path's tail, shared by the directory and lake
+    * IVF-PQ indexes: [[adcCandidates]] over the live probed rows, then
+    * the `rerank` candidate ids join back to the corpus for the exact
+    * [[cosineTopK]] re-rank.
+    */
+  private def adcRerankTopK(probed: DataFrame, corpus: DataFrame,
+      cb: Array[Array[Array[Double]]], qVec: Array[Float], k: Int,
+      rerank: Int): DataFrame =
+    cosineTopK(adcCandidates(probed, cb, qVec, rerank)
+      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"), qVec, k)
 
   /** Gated indexed-IVF-PQ report: full-probe config (nProbe = nLists,
     * rerank covering the unsafe pool) ≡ brute force; reduced-probe recall
@@ -1468,10 +1355,8 @@ object Similarity {
   def ivfPqIndexedReport(spark: SparkSession, dir: String): DataFrame = {
     val indexPath = graft.util.Scratch.dir("graft_ivfpq_index").toString
     val (centroids, cb) = writeIvfPqIndex(spark, dir, indexPath, nLists = 16)
-    val qVec = emb(spark, dir).filter(col("vec_id") === 0L)
-      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
-    ivfPqTopKIndexed(spark, indexPath, emb(spark, dir), centroids, cb, qVec,
-      nProbe = 16, rerank = 400, excludeVecId = Some(0L))
+    ivfPqTopKIndexed(spark, indexPath, emb(spark, dir), centroids, cb,
+      queryVec(spark, dir), nProbe = 16, rerank = 400, excludeVecId = Some(0L))
   }
 
   /** Scalar int8 quantization: per-vector absmax scale, code_d =

@@ -434,16 +434,28 @@ object Snapshots {
     * degrades to the no-op inside [[appendBatch]]. Losers clean up
     * their staged files before retrying (publishManifest deletes the
     * owned subdirectory on EEXIST), so retries never leak data files.
-    * Bounded attempts keep a livelock loud instead of silent.
     */
-  def appendBatchRetry(df: DataFrame, table: String, batchId: Long,
-      maxAttempts: Int = 32): Option[Int] = {
-    var attempt = 1
-    while (attempt < maxAttempts) {
-      try return appendBatch(df, table, batchId)
-      catch { case _: IllegalStateException => attempt += 1 }
+  def appendBatchRetry(df: DataFrame, table: String,
+      batchId: Long): Option[Int] =
+    occRetry(appendBatch(df, table, batchId))
+
+  /** Attempts of the OCC retry loop before a conflict surfaces. */
+  private val OccAttempts = 32
+
+  /** THE optimistic-concurrency retry loop of every `...Retry` writer:
+    * a lost publication CAS (`IllegalStateException`) re-runs `attempt`
+    * from scratch — re-reading the new latest version — up to
+    * [[OccAttempts]] times, and the last attempt runs unguarded so its
+    * conflict surfaces. Bounded attempts keep a livelock loud instead of
+    * silent.
+    */
+  private def occRetry[T](attempt: => T): T = {
+    var n = 1
+    while (n < OccAttempts) {
+      try return attempt
+      catch { case _: IllegalStateException => n += 1 }
     }
-    appendBatch(df, table, batchId) // last attempt surfaces the conflict
+    attempt
   }
 
   /** [[rewrite]] under the same OCC retry loop: a compactor that loses
@@ -453,14 +465,8 @@ object Snapshots {
     * [[rewrite]] from scratch) and re-attempts publication.
     */
   def rewriteRetry(spark: SparkSession, table: String,
-      targetFiles: Int = 1, maxAttempts: Int = 32): Int = {
-    var attempt = 1
-    while (attempt < maxAttempts) {
-      try return rewrite(spark, table, targetFiles)
-      catch { case _: IllegalStateException => attempt += 1 }
-    }
-    rewrite(spark, table, targetFiles)
-  }
+      targetFiles: Int = 1): Int =
+    occRetry(rewrite(spark, table, targetFiles))
 
   /** Content-preserving CLUSTERED rewrite — [[rewrite]] that re-RANGES
     * instead of coalescing: republish the latest version's rows
@@ -606,15 +612,9 @@ object Snapshots {
     */
   def zorderRewriteRetry(spark: SparkSession, table: String,
       colA: String, colB: String, targetFiles: Int = 4, bits: Int = 8,
-      quantileTiles: Boolean = false, maxAttempts: Int = 32): Int = {
-    var attempt = 1
-    while (attempt < maxAttempts) {
-      try return zorderRewrite(spark, table, colA, colB, targetFiles,
-        bits, quantileTiles)
-      catch { case _: IllegalStateException => attempt += 1 }
-    }
-    zorderRewrite(spark, table, colA, colB, targetFiles, bits, quantileTiles)
-  }
+      quantileTiles: Boolean = false): Int =
+    occRetry(zorderRewrite(spark, table, colA, colB, targetFiles, bits,
+      quantileTiles))
 
   /** Commit history — DESCRIBE HISTORY for the snapshot table: one row
     * per version with the op kind, file count, delta row count, and the

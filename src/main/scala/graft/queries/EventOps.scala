@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Scratch.stageParquetFile
 
 /** SURVEY §2 parity operators, expressed over the driver's `events` table
   * (`event_id, ts, user_id, event_type, value, props`) — the telemetry-shaped
@@ -226,13 +227,6 @@ object EventOps {
   case class EventRecord(station_id: Long, s_no: Long,
       ts: java.sql.Timestamp, event_type: String, value: Double)
 
-  /** A1-streaming gate — the SAME latest-per-key result as [[latestPerKey]],
-    * produced through the streaming path: file-source micro-batch read
-    * (S5), mapGroupsWithState latest state (A1), memory sink (A3/A4 serve),
-    * drained with Trigger.AvailableNow. Deterministic because the input is
-    * one parquet file → one micro-batch → exactly one Update row per key;
-    * the driver hash-compares it against the batch oracle.
-    */
   /** Staged file source + memory-sink drain shared by the streaming gates
     * (one copy, so the gates can't silently diverge). The file streaming
     * source requires a DIRECTORY; the single events file is staged into a
@@ -257,9 +251,28 @@ object EventOps {
   // concurrent drains (the conf mutation window) against each other.
   private val drainLock = new Object
 
+  /** State-store INSTANCE count of every drain (= shuffle partitions at
+    * first batch, then pinned in the checkpoint). It should track state
+    * VOLUME, not CPU count: every instance pays per-batch
+    * commit/maintenance file I/O (up to 4 stores per partition for a
+    * stream-stream join), so 32 instances for ~100k rows of state is pure
+    * overhead — these gates measurably drain ~2x faster at 8 (and
+    * measurably SLOWER again at 4: the instances also carry processing
+    * parallelism, and below 8 that loss outweighs the saved commit I/O).
+    * A 100 TB deployment sizes it UP for exactly the same reason, and
+    * because the count is pinned at checkpoint creation it must be chosen
+    * for peak state, not cores.
+    */
+  private val StatePartitions = 8
+
+  /** The larger-than-heap state store, and the only one
+    * `transformWithState` runs on.
+    */
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def drainToMemory(spark: SparkSession, df: DataFrame, sink: String,
       mode: org.apache.spark.sql.streaming.OutputMode,
-      statePartitions: Int = 8,
       stateStoreProvider: Option[String] = None,
       checkpoint: Option[String] = None,
       pollInputRows: Option[Long] = None): DataFrame =
@@ -269,18 +282,8 @@ object EventOps {
     // free of session-catalog mutation (the memory sink's rows are captured
     // by the resolved plan, so the view itself is disposable)
     val name = sink + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // State-store INSTANCE count (= shuffle partitions at first batch,
-    // then pinned in the checkpoint) should track state VOLUME, not CPU
-    // count: every instance pays per-batch commit/maintenance file I/O
-    // (up to 4 stores per partition for a stream-stream join), so 32
-    // instances for ~100k rows of state is pure overhead — these gates
-    // measurably drain ~2x faster at 8 (and measurably SLOWER again at 4:
-    // the instances also carry processing parallelism, and below 8 that
-    // loss outweighs the saved commit I/O). A 100 TB deployment sizes it UP
-    // for exactly the same reason, and because the count is pinned at
-    // checkpoint creation it must be chosen for peak state, not cores.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
     // optional state-store provider override (e.g. RocksDB for the
     // larger-than-heap state path); read at query start and pinned in
     // the checkpoint, so set-and-restore around the drain is exact
@@ -362,6 +365,13 @@ object EventOps {
     }
   }
 
+  /** A1-streaming gate — the SAME latest-per-key result as [[latestPerKey]],
+    * produced through the streaming path: file-source micro-batch read
+    * (S5), mapGroupsWithState latest state (A1), memory sink (A3/A4 serve),
+    * drained with Trigger.AvailableNow. Deterministic because the input is
+    * one parquet file → one micro-batch → exactly one Update row per key;
+    * the driver hash-compares it against the batch oracle.
+    */
   def latestPerKeyStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val enc = org.apache.spark.sql.Encoders.product[EventRecord]
@@ -373,11 +383,19 @@ object EventOps {
       val i = r.ts.toInstant
       (i.getEpochSecond * 1000000L + i.getNano / 1000L, r.s_no)
     }
-    // defensive: an Update-mode memory sink appends one row per key PER
-    // BATCH; if a session setting ever splits the staged file into several
-    // micro-batches, reduce to the event-time winner instead of silently
-    // hash-mismatching (single-batch stage ⇒ value-level no-op)
-    drainToMemory(spark, latest.toDF(), "latest_stream_gate", OutputMode.Update())
+    latestWinners(drainToMemory(spark, latest.toDF(), "latest_stream_gate",
+      OutputMode.Update()))
+  }
+
+  /** The event-time winner per station of an Update-mode latest-state
+    * drain, in the latest-per-key oracle's columns. Defensive: an
+    * Update-mode memory sink appends one row per key PER BATCH; if a
+    * session setting ever splits the staged file into several
+    * micro-batches, this reduces to the winner instead of silently
+    * hash-mismatching (single-batch stage ⇒ value-level no-op).
+    */
+  private def latestWinners(drained: DataFrame): DataFrame =
+    drained
       .groupBy(col("station_id"))
       .agg(max_by(
         struct(col("ts"), col("s_no"), col("event_type"), col("value")),
@@ -386,45 +404,25 @@ object EventOps {
         date_format(col("r.ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
         col("r.s_no").as("s_no"), col("r.event_type").as("event_type"),
         round(col("r.value"), 2).as("value"))
-  }
 
   /** A1 through Spark 4's `transformWithState`
     * ([[graft.streaming.TwsLatest]]) — the third stateful-API gate beside
     * mapGroupsWithState (p_latest_stream) and the arrival-order mode
     * (p_latest_arrival), all hash-compared to the same latest-per-key
-    * oracle. transformWithState runs only on the RocksDB state store;
-    * the provider conf is set for the drain and restored after (the same
-    * set-and-restore discipline ScaleSpec uses for planner confs).
+    * oracle. transformWithState runs only on the RocksDB state store,
+    * which the drain sets for its query and restores after.
     */
   def latestPerKeyTws(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val enc =
       org.apache.spark.sql.Encoders.product[graft.streaming.TwsLatest.Rec]
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rec = eventsStream(spark, dir)
-        .select(col("user_id").as("station_id"), col("event_id").as("s_no"),
-          col("ts"), col("event_type"), col("value"))
-        .as[graft.streaming.TwsLatest.Rec]
-      val latest = graft.streaming.TwsLatest.latestStream(rec)
-      // same defensive multi-batch reduce as latestPerKeyStream
-      drainToMemory(spark, latest.toDF(), "latest_tws_gate",
-          OutputMode.Update())
-        .groupBy(col("station_id"))
-        .agg(max_by(
-          struct(col("ts"), col("s_no"), col("event_type"), col("value")),
-          struct(col("ts"), col("s_no"))).as("r"))
-        .select(col("station_id"),
-          date_format(col("r.ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("r.s_no").as("s_no"), col("r.event_type").as("event_type"),
-          round(col("r.value"), 2).as("value"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val rec = eventsStream(spark, dir)
+      .select(col("user_id").as("station_id"), col("event_id").as("s_no"),
+        col("ts"), col("event_type"), col("value"))
+      .as[graft.streaming.TwsLatest.Rec]
+    latestWinners(drainToMemory(spark,
+      graft.streaming.TwsLatest.latestStream(rec).toDF(), "latest_tws_gate",
+      OutputMode.Update(), stateStoreProvider = Some(RocksDbProvider)))
   }
 
   /** Value-state TTL gate ([[graft.streaming.TwsTtl]]) — the one
@@ -457,8 +455,6 @@ object EventOps {
     val stage = graft.util.Scratch.dir("graft_ttl_src")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val base = System.currentTimeMillis()
-    val rocks = "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider"
     stageParquetFile(raw.limit(0), stage, "0.parquet", base - 60000)
     stageParquetFile(raw.filter(col("event_id") % 2 === 0), stage,
       "a.parquet", base)
@@ -471,7 +467,7 @@ object EventOps {
     val out = drainToMemory(spark,
       graft.streaming.TwsTtl.countStream(rec, ttlMillis = 400L).toDF(),
       "state_ttl", OutputMode.Update(),
-      stateStoreProvider = Some(rocks),
+      stateStoreProvider = Some(RocksDbProvider),
       pollInputRows = Some(raw.count()))
     out
       .groupBy(col("station_id"))
@@ -547,18 +543,6 @@ object EventOps {
         col("event_type"), col("n"), col("sum_value"))
   }
 
-  /** The same q12 window aggregate through the SCALE-CORRECT streaming
-    * shape: watermark + APPEND output mode — each window is emitted exactly
-    * once, finalized, and its state is evicted when the watermark passes its
-    * end. (Complete mode, gated by [[tumblingWindowStream]], re-emits every
-    * window each trigger: state ∝ all windows ever — a scale-killer as the
-    * only exercised mode; this gate closes that gap.)
-    *
-    * Deterministic two-batch drain via the staged sentinel source (see the
-    * staging doc below). The sentinels' own windows never finalize (their
-    * ends exceed the final watermark) and their rows are filtered from
-    * the drained result either way.
-    */
   /** Staged file-stream source for append-mode gates: the real events file
     * PLUS the first far-future `__flush__` sentinel in micro-batch one,
     * the second sentinel in micro-batch two (`maxFilesPerTrigger=2` +
@@ -571,29 +555,10 @@ object EventOps {
     * state-store commit/maintenance round, so the drain floor is
     * batches × store-instance I/O). Callers filter
     * `event_type != '__flush__'` from their drained result.
-    */
-  /** Write `df` as ONE parquet file at `stage/name` with the given mtime
-    * — the staging primitive for multi-batch file-source gates
-    * (`maxFilesPerTrigger=1` orders micro-batches by file mtime).
-    */
-  private def stageParquetFile(df: DataFrame, stage: java.nio.file.Path,
-      name: String, mtimeMillis: Long): Unit = {
-    val tmp = graft.util.Scratch.dir(s"graft_stage_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = new java.io.File(tmp.toString).listFiles()
-      .find(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part file written under $tmp"))
-    val dest = stage.resolve(name)
-    java.nio.file.Files.move(part.toPath, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
-  }
-
-  /** Staged file stream + far-future flush sentinels; `slice` (raw,
-    * pre-normalization rows) restricts the staged events — `None`
-    * stages the whole file byte-identical via copy. One definition for
-    * the single-source append gates AND each leg of the union gate, so
+    *
+    * `slice` (raw, pre-normalization rows) restricts the staged events —
+    * `None` stages the whole file byte-identical via copy. One definition
+    * for the single-source append gates AND each leg of the union gate, so
     * the sentinel encoding logic cannot drift between them. The staged
     * directory is IMMUTABLE and identical for every gate that streams the
     * same (corpus, slice), so ~12 gate invocations share one
@@ -647,6 +612,18 @@ object EventOps {
       Map("maxFilesPerTrigger" -> "2"))
   }
 
+  /** The same q12 window aggregate through the SCALE-CORRECT streaming
+    * shape: watermark + APPEND output mode — each window is emitted exactly
+    * once, finalized, and its state is evicted when the watermark passes its
+    * end. (Complete mode, gated by [[tumblingWindowStream]], re-emits every
+    * window each trigger: state ∝ all windows ever — a scale-killer as the
+    * only exercised mode; this gate closes that gap.)
+    *
+    * Deterministic two-batch drain via the staged sentinel source (see
+    * [[eventsStreamWithFlush]]). The sentinels' own windows never finalize
+    * (their ends exceed the final watermark) and their rows are filtered
+    * from the drained result either way.
+    */
   def tumblingWindowStreamAppend(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
     val agg = eventsStreamWithFlush(spark, dir)
@@ -964,9 +941,7 @@ object EventOps {
   def streamStreamJoinRocks(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
     drainToMemory(spark, severeContextJoin(spark, dir), "ss_rocks_gate",
-      OutputMode.Append(),
-      stateStoreProvider = Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      OutputMode.Append(), stateStoreProvider = Some(RocksDbProvider))
   }
 
   /** Stream-stream LEFT OUTER join — the half of streaming join semantics

@@ -2,7 +2,7 @@ package graft.util
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Process-lifetime scratch directories: created under the scratch root
   * and recursively deleted at JVM exit, after the SparkContext stops.
@@ -99,6 +99,24 @@ object Scratch {
   /** A fresh scratch directory, deleted (recursively) at JVM exit. */
   def dir(prefix: String): Path =
     Files.createTempDirectory(root, prefix)
+
+  /** Write `df` as ONE parquet file at `stage/name` with the given mtime
+    * — the staging primitive for multi-batch file-source gates
+    * (`maxFilesPerTrigger=1` orders micro-batches by file mtime).
+    */
+  def stageParquetFile(df: DataFrame, stage: Path, name: String,
+      mtimeMillis: Long): Unit = {
+    val tmp = dir(s"graft_stage_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = new java.io.File(tmp.toString).listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part file written under $tmp"))
+    val dest = stage.resolve(name)
+    Files.move(part.toPath, dest)
+    Files.setLastModifiedTime(dest,
+      java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
+  }
 
   /** Recursive delete that does NOT follow symlinks: a link inside a
     * scratch dir pointing at real data (a future staging optimization)

@@ -797,6 +797,32 @@ class SimilaritySpec extends SparkSpec {
     assert(probed.collect().length == 10)
   }
 
+  /** Streams the odd vec_ids of `e` into `table` (bootstrapped with the
+    * even ids in `layout`) as two staged files, through `append(stageDir,
+    * checkpoint)` called twice over ONE checkpoint — the second call is
+    * a restart — then checks the exactly-once contract: one version per
+    * batch, and a redelivered final batch id is a no-op.
+    */
+  private def streamOddIds(e: org.apache.spark.sql.DataFrame, table: String,
+      layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
+      append: (String, String) => Unit): Unit = {
+    import graft.lake.Snapshots
+    Snapshots.append(layout(e.filter(col("vec_id") % 2 === 0)), table)
+    val stage = graft.util.Scratch.dir("vec_stream_src")
+    val ck = tmpDir("vec_stream_ck")
+    val base = System.currentTimeMillis()
+    Seq(1, 3).zipWithIndex.foreach { case (slice, i) =>
+      graft.util.Scratch.stageParquetFile(
+        e.filter(pmod(col("vec_id"), lit(4)) === slice), stage,
+        s"g$i.parquet", base + i * 60000L)
+      append(stage.toString, ck)
+    }
+    assert(Snapshots.latestVersion(table) == 3,
+      "n_versions must be bootstrap + one per streamed batch")
+    assert(Snapshots.appendBatch(layout(e.limit(1)), table, 1L).isEmpty,
+      "a redelivered final batch id must no-op")
+  }
+
   test("lake-table LSH index: manifest stats skip files, full probes equal brute force") {
     import graft.lake.Snapshots
     // build the lake layout the streaming maintenance gate publishes:
@@ -804,21 +830,29 @@ class SimilaritySpec extends SparkSpec {
     // contiguous bucket band (tight min/max stats per file)
     val table = tmpDir("lsh_lake_spec")
     val nBits = 6
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .withColumn("bucket", graft.functions.HyperplaneBucket
-        .hyperplane_bucket(col("embedding"), nBits))
-      .repartitionByRange(8, col("bucket"))
-    Snapshots.append(e, table)
-    val qVec = spark.read.parquet(s"$dir/embeddings.parquet")
+    val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
+    def layout(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("bucket", graft.functions.HyperplaneBucket
+          .hyperplane_bucket(col("embedding"), nBits))
+        .repartitionByRange(8, col("bucket"))
+    Snapshots.append(layout(corpus), table)
+    val qVec = corpus
       .filter(col("vec_id") === 0L).select(col("embedding"))
       .collect().head.getSeq[Float](0).toArray
     // full probes == brute force over the corpus
     val brute = Similarity.bruteForceTopK(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    val full = Similarity.lshLakeTopK(spark, table, qVec, nBits = nBits,
-      probes = 64, excludeVecId = Some(0L)).collect()
+    def fullProbe(t: String) = Similarity.lshLakeTopK(spark, t, qVec,
+      nBits = nBits, probes = 64, excludeVecId = Some(0L)).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(full.sameElements(brute))
+    assert(fullProbe(table).sameElements(brute))
+    // the same layout streamed in exactly once answers identically
+    val streamed = tmpDir("lsh_lake_stream_spec")
+    streamOddIds(corpus, streamed, layout) { (stage, ck) =>
+      Similarity.streamAppendLshLake(spark, stage, ck, streamed, nBits,
+        corpus.schema)
+    }
+    assert(fullProbe(streamed).sameElements(brute))
     // a narrow probe set must SKIP files at plan time, through the
     // manifest's per-file bucket min/max — the lake's data skipping is
     // this layout's partition pruning
@@ -845,22 +879,29 @@ class SimilaritySpec extends SparkSpec {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val centroids = Similarity.ivfFitCentroidsOf(e, k = nLists)
     val cb = Similarity.pqFitCodebooks(spark, dir)
-    Snapshots.append(
-      Similarity.pqEncodeDf(Similarity.ivfAssignOf(e, centroids), cb)
+    def layout(df: org.apache.spark.sql.DataFrame) =
+      Similarity.pqEncodeDf(Similarity.ivfAssignOf(df, centroids), cb)
         .select(col("vec_id"),
           col("codes").cast("array<tinyint>").as("codes"), col("ivf_list"))
-        .repartitionByRange(8, col("ivf_list")),
-      table)
+        .repartitionByRange(8, col("ivf_list"))
+    Snapshots.append(layout(e), table)
     val qVec = e.filter(col("vec_id") === 0L).select(col("embedding"))
       .collect().head.getSeq[Float](0).toArray
     // full probes + corpus-covering rerank == brute force
     val brute = Similarity.bruteForceTopK(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    val full = Similarity.ivfPqLakeTopK(spark, table, e, centroids, cb,
-      qVec, nProbe = nLists, rerank = e.count().toInt,
+    def fullProbe(t: String) = Similarity.ivfPqLakeTopK(spark, t, e,
+      centroids, cb, qVec, nProbe = nLists, rerank = e.count().toInt,
       excludeVecId = Some(0L)).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(full.sameElements(brute))
+    assert(fullProbe(table).sameElements(brute))
+    // the same layout streamed in exactly once answers identically
+    val streamed = tmpDir("ivfpq_lake_stream_spec")
+    streamOddIds(e, streamed, layout) { (stage, ck) =>
+      Similarity.streamAppendIvfPqLake(spark, stage, ck, streamed, centroids,
+        cb, e.schema)
+    }
+    assert(fullProbe(streamed).sameElements(brute))
     // a narrow probe set must SKIP files at plan time through the
     // manifest's per-file ivf_list min/max — the learned-quantizer
     // analog of the LSH lake layout's bucket skipping

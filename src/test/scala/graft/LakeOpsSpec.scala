@@ -857,37 +857,51 @@ class CompactionSpec extends SparkSpec {
   test("ANN delete: tombstoned vectors vanish from probes, reclaim drops them physically") {
     import graft.ext.sim.Similarity
     val dir = "/root/testdata/sf0.001"
-    val indexPath = graft.util.Scratch.dir("graft_del_spec").toString
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    (0L until 2L).foreach(g =>
-      Similarity.appendLshIndex(
-        e.filter(pmod(col("vec_id"), lit(2L)) === g), indexPath, nBits = 6))
     val qVec = e.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect().head.getSeq[Float](0).toArray
-    def answer(): List[Long] = Similarity
-      .lshTopKIndexed(spark, indexPath, qVec, nBits = 6, probes = 64,
-        excludeVecId = Some(0L))
-      .collect().map(_.getLong(0)).toList
-    val before = answer()
-    val victims = before.take(3)
-    Similarity.deleteFromVecIndex(spark, indexPath, victims)
-    // a second delete of the same ids is an absorbed no-op, not a double
-    Similarity.deleteFromVecIndex(spark, indexPath, victims.take(1))
-    val masked = answer()
-    assert(victims.forall(v => !masked.contains(v)),
-      s"tombstoned $victims still probed: $masked")
-    assert(masked.size == 10, "k results still returned after delete")
-    val physicalBefore = spark.read.parquet(indexPath).count()
-    Similarity.lshIndexReclaim(spark, indexPath)
-    assert(answer() == masked, "reclaim changed probe answers")
-    assert(spark.read.parquet(indexPath).count() == physicalBefore - 3,
-      "reclaim must physically drop exactly the tombstoned rows")
-    assert(!new java.io.File(indexPath, "_tombstones").exists(),
-      "reclaim must clear the tombstone set")
-    // pruning survives the reclaim rewrite
-    val plan = spark.read.parquet(indexPath)
-      .filter(col("bucket") === 3).queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
+    // one lifecycle, two directory layouts: each builds its index and
+    // returns its full-probe query, its reclaim and its partition column
+    val lsh = () => {
+      val indexPath = graft.util.Scratch.dir("graft_del_spec").toString
+      (0L until 2L).foreach(g =>
+        Similarity.appendLshIndex(
+          e.filter(pmod(col("vec_id"), lit(2L)) === g), indexPath, nBits = 6))
+      (indexPath, () => Similarity.lshTopKIndexed(spark, indexPath, qVec,
+          nBits = 6, probes = 64, excludeVecId = Some(0L)),
+        () => Similarity.lshIndexReclaim(spark, indexPath), "bucket")
+    }
+    val ivf = () => {
+      val indexPath = graft.util.Scratch.dir("graft_ivf_del_spec").toString
+      val centroids = Similarity.writeIvfIndex(spark, dir, indexPath, nLists = 8)
+      (indexPath, () => Similarity.ivfTopKIndexed(spark, indexPath, centroids,
+          qVec, nProbe = 8, excludeVecId = Some(0L)),
+        () => Similarity.ivfIndexReclaim(spark, indexPath), "ivf_list")
+    }
+    for (build <- Seq(lsh, ivf)) {
+      val (indexPath, probe, reclaim, partCol) = build()
+      def answer(): List[Long] = probe().collect().map(_.getLong(0)).toList
+      val before = answer()
+      val victims = before.take(3)
+      Similarity.deleteFromVecIndex(spark, indexPath, victims)
+      // a second delete of the same ids is an absorbed no-op, not a double
+      Similarity.deleteFromVecIndex(spark, indexPath, victims.take(1))
+      val masked = answer()
+      assert(victims.forall(v => !masked.contains(v)),
+        s"$partCol: tombstoned $victims still probed: $masked")
+      assert(masked.size == 10, s"$partCol: k results still returned after delete")
+      val physicalBefore = spark.read.parquet(indexPath).count()
+      reclaim()
+      assert(answer() == masked, s"$partCol: reclaim changed probe answers")
+      assert(spark.read.parquet(indexPath).count() == physicalBefore - 3,
+        s"$partCol: reclaim must physically drop exactly the tombstoned rows")
+      assert(!new java.io.File(indexPath, "_tombstones").exists(),
+        s"$partCol: reclaim must clear the tombstone set")
+      // pruning survives the reclaim rewrite
+      val plan = spark.read.parquet(indexPath)
+        .filter(col(partCol) === 3).queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters"), s"$partCol: $plan")
+    }
   }
 
   test("streaming read of the lake feeds the index sink (SURVEY 3.2 path)") {
