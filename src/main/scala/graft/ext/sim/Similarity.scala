@@ -546,52 +546,22 @@ object Similarity {
   }
 
   /** One EXACTLY-ONCE streaming-append session into the LSH lake-table
-    * index: [[streamAppendLake]] with the [[withBucketFiles]] layout.
+    * index: [[graft.lake.Snapshots.streamAppend]] of the staged corpus
+    * files ([[stagedVectors]]) with the [[withBucketFiles]] layout.
     */
   def streamAppendLshLake(spark: SparkSession, stageDir: String,
       checkpoint: String, table: String, nBits: Int,
       schema: org.apache.spark.sql.types.StructType): Unit =
-    streamAppendLake(spark, stageDir, checkpoint, table, schema)(
-      withBucketFiles(_, nBits))
+    graft.lake.Snapshots.streamAppend(stagedVectors(spark, stageDir, schema),
+      table, checkpoint)(withBucketFiles(_, nBits))
 
-  /** One EXACTLY-ONCE streaming-append session into a lake-table index,
-    * shared by both lake layouts (`layout` turns a micro-batch of corpus
-    * rows into index rows): every staged file not yet in the checkpoint
-    * becomes one micro-batch, published through
-    * [[graft.lake.Snapshots.appendBatchRetry]]'s batch-id high-water
-    * mark — Structured Streaming's at-least-once foreachBatch delivery
-    * degrades to exactly-once because a redelivered id no-ops against
-    * the commit log itself (no reconciliation scan). Each batch
-    * DELIVERS ITSELF TWICE (the p_stream_sink_lake contract): the
-    * second call simulates the sink-failed-after-publish retry and
-    * must return None. `Trigger.AvailableNow` drains what is staged
-    * and stops, so a caller can stage more files and re-enter with the
-    * SAME checkpoint — a restart that must resume exactly past the
-    * published batches.
+  /** The staged corpus files as a stream, one file per micro-batch —
+    * the source of both lake layouts' streaming appends.
     */
-  private def streamAppendLake(spark: SparkSession, stageDir: String,
-      checkpoint: String, table: String,
-      schema: org.apache.spark.sql.types.StructType)(
-      layout: DataFrame => DataFrame): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = spark.readStream.schema(schema)
+  private def stagedVectors(spark: SparkSession, stageDir: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (bdf: DataFrame, bid: Long) =>
-        import graft.lake.Snapshots
-        val delta = layout(bdf)
-        val published = Snapshots.appendBatchRetry(delta, table, bid)
-          .isDefined || Snapshots.lastBatchId(table).exists(_ >= bid)
-        require(published, s"index batch $bid was not published")
-        val again = Snapshots.appendBatch(delta, table, bid)
-        require(again.isEmpty, s"duplicate index batch $bid published twice")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** STREAMING index maintenance gate — the freshness rung the index
     * lifecycle was missing (build/append/compact/delete are gated;
@@ -602,8 +572,8 @@ object Similarity {
     * the same plan-time pruning ([[lshLakeTopK]]), and the commit
     * log's batch-id high-water mark gives the stream exactly-once
     * appends — the composition the verdict asked for
-    * ([[graft.lake.Snapshots.appendBatch]] under foreachBatch, the
-    * p_stream_sink_lake / p_wire_restart pattern on the index layout).
+    * ([[graft.lake.Snapshots.streamAppend]], the p_stream_sink_lake
+    * sink on the index layout).
     * The fixture and contract columns are [[lakeStreamReport]]'s.
     * Solo floor ~3 s: two AvailableNow drain cycles + three lake
     * publications — the same class as p_stream_sink_lake (SCALE.md
@@ -619,12 +589,12 @@ object Similarity {
 
   /** The streaming-maintenance fixture both lake layouts gate
     * ([[lshIndexStreamReport]], [[ivfPqIndexStreamReport]]), through
-    * [[streamAppendLake]] with the layout's `layout` transform: even
-    * vec_ids bootstrap v1; the odd ids arrive as two staged files
-    * drained by TWO AvailableNow sessions over ONE checkpoint — the
-    * second session is a mid-stream restart that must resume past batch
-    * 0 without re-publishing it. Every batch also re-delivers itself
-    * inside foreachBatch (must no-op), and a post-hoc redelivery of the
+    * [[graft.lake.Snapshots.streamAppend]] with the layout's `layout`
+    * transform: even vec_ids bootstrap v1; the odd ids arrive as two
+    * staged files drained by TWO AvailableNow sessions over ONE
+    * checkpoint — the second session is a mid-stream restart that must
+    * resume past batch 0 without re-publishing it. Every batch also
+    * re-delivers itself inside the sink (must no-op), and a post-hoc redelivery of the
     * final batch id must still no-op. Contract columns: `probe(table,
     * n_rows)`'s full-probe top-10 (= brute force over the WHOLE corpus —
     * a lost or doubled streamed vector shifts it), `n_versions` pinned
@@ -648,7 +618,8 @@ object Similarity {
     Seq(1, 3).zipWithIndex.foreach { case (slice, batch) =>
       Scratch.stageParquetFile(e.filter(pmod(col("vec_id"), lit(4)) === slice),
         stage, s"g${batch + 1}.parquet", base + batch * 60000L)
-      streamAppendLake(spark, stage.toString, ck, table, e.schema)(layout)
+      Snapshots.streamAppend(stagedVectors(spark, stage.toString, e.schema),
+        table, ck)(layout)
       require(Snapshots.lastBatchId(table).contains(batch.toLong),
         s"session ${batch + 1} must have published exactly through batch $batch")
     }
@@ -744,17 +715,17 @@ object Similarity {
   /** [[streamAppendLshLake]] on the IVF-PQ layout — the index-freshness
     * asymmetry the r13 verdict flagged (streaming exactly-once appends
     * existed for the LSH lake layout only). Same machinery end to end
-    * ([[streamAppendLake]]): the layout transform assigns lists +
-    * PQ-encodes against the RESIDENT quantizer (both are fixed broadcast
-    * artifacts, so the transform is a narrow per-row pass — no refit, no
-    * resident rewrite).
+    * ([[graft.lake.Snapshots.streamAppend]]): the layout transform
+    * assigns lists + PQ-encodes against the RESIDENT quantizer (both are
+    * fixed broadcast artifacts, so the transform is a narrow per-row
+    * pass — no refit, no resident rewrite).
     */
   def streamAppendIvfPqLake(spark: SparkSession, stageDir: String,
       checkpoint: String, table: String,
       centroids: Array[Array[Double]], cb: Array[Array[Array[Double]]],
       schema: org.apache.spark.sql.types.StructType): Unit =
-    streamAppendLake(spark, stageDir, checkpoint, table, schema)(
-      withIvfListFiles(_, centroids, cb))
+    graft.lake.Snapshots.streamAppend(stagedVectors(spark, stageDir, schema),
+      table, checkpoint)(withIvfListFiles(_, centroids, cb))
 
   /** STREAMING maintenance gate for the IVF-PQ layout — closes the
     * freshness asymmetry ([[lshIndexStreamReport]]'s contract on the

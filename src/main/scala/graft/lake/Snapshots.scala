@@ -29,9 +29,10 @@ import scala.jdk.CollectionConverters._
   * deployment is the reference's single archiver (`Weather-Monitoring`'s
   * central station owns its archive directory — see SURVEY §3.1), but a
   * racing second writer is DETECTED, not absorbed: publication is
-  * single-winner and the loser gets an explicit conflict error to retry
-  * from a fresh `latestVersion` — the optimistic-concurrency loop the
-  * production formats run, minus their automatic retry.
+  * single-winner, and the loser re-runs its read-and-publish from a
+  * fresh `latestVersion` — the optimistic-concurrency loop the
+  * production formats run ([[occRetry]]) — except an [[append]] pinned
+  * to an `expectedVersion`, which gets the explicit conflict error.
   */
 object Snapshots {
 
@@ -281,10 +282,13 @@ object Snapshots {
     * rows); what changes is PROVENANCE — later versions no longer
     * reference the old small files, which is precisely what makes
     * [[vacuum]] able to reclaim them. Cost ∝ live table size, run it
-    * when small-file count (not data) is the problem.
+    * when small-file count (not data) is the problem. A rewrite that
+    * loses its CAS to a concurrent ingest re-reads from scratch
+    * ([[occRetry]]): it must republish the LATEST content, so retrying
+    * from the stale read would drop the winner's rows.
     */
   def rewrite(spark: SparkSession, table: String,
-      targetFiles: Int = 1): Int = {
+      targetFiles: Int = 1): Int = occRetry {
     val current = latestVersion(table)
     require(current > 0, s"table $table has no published versions")
     publish(read(spark, table, Some(current)).coalesce(targetFiles),
@@ -408,46 +412,74 @@ object Snapshots {
     * micro-batch under the SAME batch id when the sink failed before
     * the checkpoint committed, so idempotence on batch id is exactly
     * what turns at-least-once delivery into an exactly-once table.
-    * The publish itself is the CAS hard-link: when a racing duplicate
-    * delivery loses the race, the loser re-checks the high-water mark
-    * and degrades to the no-op instead of surfacing the conflict.
+    * The publish itself is the CAS hard-link, run under [[occRetry]] —
+    * the commit protocol every lakehouse runs when ingest races
+    * maintenance (Delta's conflict-detection-and-retry, Iceberg's commit
+    * loop): a lost CAS re-checks the high-water mark (a racing duplicate
+    * delivery of this id degrades to the no-op) and otherwise re-reads
+    * the new latest version and re-attempts, because an append COMMUTES
+    * with any content-preserving rewrite (the delta rows are new either
+    * way). Losers clean up their staged files before retrying
+    * (publishManifest deletes the owned subdirectory on EEXIST), so
+    * retries never leak data files.
     */
   def appendBatch(df: DataFrame, table: String,
-      batchId: Long): Option[Int] = {
-    if (lastBatchId(table).exists(_ >= batchId)) return None
-    val cur = latestVersion(table)
-    try Some(publish(df, table, Some(cur), carryForward = true,
-      extraHeaders = Seq(s"#batch=$batchId")))
-    catch {
-      case e: IllegalStateException =>
-        if (lastBatchId(table).exists(_ >= batchId)) None else throw e
+      batchId: Long): Option[Int] = occRetry {
+    if (lastBatchId(table).exists(_ >= batchId)) None
+    else {
+      val cur = latestVersion(table)
+      try Some(publish(df, table, Some(cur), carryForward = true,
+        extraHeaders = Seq(s"#batch=$batchId")))
+      catch {
+        case e: IllegalStateException =>
+          if (lastBatchId(table).exists(_ >= batchId)) None else throw e
+      }
     }
   }
 
-  /** Optimistic-concurrency retry around [[appendBatch]] — the commit
-    * protocol every lakehouse runs when ingest races maintenance
-    * (Delta's conflict-detection-and-retry, Iceberg's commit loop): a
-    * lost CAS against a CONCURRENT writer re-reads the new latest
-    * version and re-attempts, because an append COMMUTES with any
-    * content-preserving rewrite/compaction (the delta rows are new
-    * either way) and a duplicate delivery of this same batch id still
-    * degrades to the no-op inside [[appendBatch]]. Losers clean up
-    * their staged files before retrying (publishManifest deletes the
-    * owned subdirectory on EEXIST), so retries never leak data files.
+  /** The lake's one streaming sink: drains `stream` with
+    * `Trigger.AvailableNow` (what is there now, then stop — a caller can
+    * stage more input and re-enter with the SAME `checkpoint`, a restart
+    * that must resume exactly past the published batches) and publishes
+    * each micro-batch's `delta(batch)` through [[appendBatch]], so
+    * Structured Streaming's at-least-once foreachBatch delivery degrades
+    * to an exactly-once table against the commit log's batch-id
+    * high-water mark (no reconciliation scan). A batch must be published
+    * now or already sit at or under the mark (Spark redelivers under
+    * the same id after a crash between publish and checkpoint commit),
+    * and each batch DELIVERS ITSELF ONCE MORE — the sink-failed-after-
+    * publish retry — which must no-op. `delta` is the batch's transform
+    * into table rows (identity, an index layout, a backfill's
+    * reconciliation); it runs once per batch.
     */
-  def appendBatchRetry(df: DataFrame, table: String,
-      batchId: Long): Option[Int] =
-    occRetry(appendBatch(df, table, batchId))
+  def streamAppend(stream: DataFrame, table: String, checkpoint: String)(
+      delta: DataFrame => DataFrame): Unit =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        val rows = delta(batch)
+        require(appendBatch(rows, table, bid).isDefined ||
+          lastBatchId(table).exists(_ >= bid), s"batch $bid was not published")
+        require(appendBatch(rows, table, bid).isEmpty,
+          s"duplicate batch $bid published twice")
+        ()
+      }
+      .start()
+      .awaitTermination()
 
   /** Attempts of the OCC retry loop before a conflict surfaces. */
   private val OccAttempts = 32
 
-  /** THE optimistic-concurrency retry loop of every `...Retry` writer:
-    * a lost publication CAS (`IllegalStateException`) re-runs `attempt`
-    * from scratch — re-reading the new latest version — up to
-    * [[OccAttempts]] times, and the last attempt runs unguarded so its
-    * conflict surfaces. Bounded attempts keep a livelock loud instead of
-    * silent.
+  /** THE optimistic-concurrency retry loop of every table-maintaining
+    * writer ([[appendBatch]], [[rewrite]], [[rewriteClustered]],
+    * [[zorderRewriteN]]): a lost publication CAS
+    * (`IllegalStateException`) re-runs `attempt` from scratch —
+    * re-reading the new latest version — up to [[OccAttempts]] times,
+    * and the last attempt runs unguarded so its conflict surfaces.
+    * Bounded attempts keep a livelock loud instead of silent. Only
+    * [[append]] with an explicit `expectedVersion` reports a lost CAS
+    * to its caller: that handle pins what the caller read.
     */
   private def occRetry[T](attempt: => T): T = {
     var n = 1
@@ -457,16 +489,6 @@ object Snapshots {
     }
     attempt
   }
-
-  /** [[rewrite]] under the same OCC retry loop: a compactor that loses
-    * its CAS to a concurrent ingest re-reads (picking up the newly
-    * appended rows — a rewrite must republish the LATEST content, so
-    * retrying from a stale read would be wrong and the loop re-enters
-    * [[rewrite]] from scratch) and re-attempts publication.
-    */
-  def rewriteRetry(spark: SparkSession, table: String,
-      targetFiles: Int = 1): Int =
-    occRetry(rewrite(spark, table, targetFiles))
 
   /** Content-preserving CLUSTERED rewrite — [[rewrite]] that re-RANGES
     * instead of coalescing: republish the latest version's rows
@@ -478,12 +500,12 @@ object Snapshots {
     * survivor files whose bands the delete predicate chose, not the
     * index key), a plain coalescing [[rewrite]] would merge unrelated
     * bands into wide-interval files and destroy the probe-side file
-    * skipping — this one restores it. Same OCC publication, same
-    * bit-for-bit content contract; cost ∝ live table (one range
+    * skipping — this one restores it. Same OCC publication and retry,
+    * same bit-for-bit content contract; cost ∝ live table (one range
     * shuffle), the OPTIMIZE bill.
     */
   def rewriteClustered(spark: SparkSession, table: String,
-      cols: Seq[String], targetFiles: Int): Int = {
+      cols: Seq[String], targetFiles: Int): Int = occRetry {
     require(cols.nonEmpty, "rewriteClustered needs at least one column")
     val current = latestVersion(table)
     require(current > 0, s"table $table has no published versions")
@@ -537,11 +559,13 @@ object Snapshots {
     * clusterings trade per-dim resolution: n = 2 → 8 bits/dim default,
     * n = 6 → 10 bits/dim max. More dims also dilute each dim's
     * locality (the curse the Z-curve inherits) — 2–4 is the practical
-    * production range, same guidance as Delta's.
+    * production range, same guidance as Delta's. A lost publication
+    * race re-reads the (new) latest version and re-tiles ([[occRetry]]):
+    * min/max and layout are recomputed against what actually won.
     */
   def zorderRewriteN(spark: SparkSession, table: String,
       cols: Seq[String], targetFiles: Int = 4,
-      bits: Int = 8, quantileTiles: Boolean = false): Int = {
+      bits: Int = 8, quantileTiles: Boolean = false): Int = occRetry {
     require(cols.size >= 2, s"z-order needs >= 2 columns, got ${cols.size}")
     val current = latestVersion(table)
     require(current > 0, s"table $table has no published versions")
@@ -604,17 +628,6 @@ object Snapshots {
         .drop("__zorder"),
       table, Some(current), carryForward = false)
   }
-
-  /** [[zorderRewrite]] under the same OCC retry loop as
-    * [[rewriteRetry]]: a lost publication race re-reads the (new)
-    * latest version and re-tiles — min/max and layout are recomputed
-    * against what actually won.
-    */
-  def zorderRewriteRetry(spark: SparkSession, table: String,
-      colA: String, colB: String, targetFiles: Int = 4, bits: Int = 8,
-      quantileTiles: Boolean = false): Int =
-    occRetry(zorderRewrite(spark, table, colA, colB, targetFiles, bits,
-      quantileTiles))
 
   /** Commit history — DESCRIBE HISTORY for the snapshot table: one row
     * per version with the op kind, file count, delta row count, and the

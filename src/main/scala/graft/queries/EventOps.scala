@@ -244,6 +244,34 @@ object EventOps {
     graft.util.EventTs.readEventsStream(spark, dir, stage.toString)
   }
 
+  /** The multi-batch file source of the staged-slice gates: slice `i`
+    * is staged as ONE file with mtime `base + i·60 s` under a fresh
+    * `prefix` scratch dir, and `maxFilesPerTrigger=1` reads one file per
+    * micro-batch in mtime order — so slice `i` is batch `i`.
+    */
+  private def stagedEventsStream(spark: SparkSession, dir: String,
+      prefix: String)(slices: DataFrame*): DataFrame = {
+    val stage = graft.util.Scratch.dir(prefix)
+    val base = System.currentTimeMillis()
+    slices.zipWithIndex.foreach { case (slice, i) =>
+      stageParquetFile(slice, stage, s"s$i.parquet", base + i * 60000L)
+    }
+    graft.util.EventTs.readEventsStream(spark, dir, stage.toString,
+      Map("maxFilesPerTrigger" -> "1"))
+  }
+
+  /** The two-batch re-ingest both dedup gates stream: batch 0 is the
+    * full log plus an in-batch replay of the odd-`event_id` rows, batch
+    * 1 replays the even-`event_id` rows.
+    */
+  private def replayedEventsStream(spark: SparkSession, dir: String,
+      prefix: String): DataFrame = {
+    val raw = spark.read.parquet(s"$dir/events.parquet")
+    stagedEventsStream(spark, dir, prefix)(
+      raw.unionAll(raw.filter(col("event_id") % 2 === 1)),
+      raw.filter(col("event_id") % 2 === 0))
+  }
+
   // drainToMemory temporarily lowers the SESSION-global shuffle-partition
   // conf; a query planned concurrently on the same session would silently
   // inherit the low setting. Gates run sequentially today — the lock makes
@@ -452,16 +480,10 @@ object EventOps {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val enc =
       org.apache.spark.sql.Encoders.product[graft.streaming.TwsTtl.KeyedRow]
-    val stage = graft.util.Scratch.dir("graft_ttl_src")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val base = System.currentTimeMillis()
-    stageParquetFile(raw.limit(0), stage, "0.parquet", base - 60000)
-    stageParquetFile(raw.filter(col("event_id") % 2 === 0), stage,
-      "a.parquet", base)
-    stageParquetFile(raw.filter(col("event_id") % 2 === 1), stage,
-      "b.parquet", base + 60000)
-    val rec = graft.util.EventTs.readEventsStream(spark, dir, stage.toString,
-        options = Map("maxFilesPerTrigger" -> "1"))
+    val rec = stagedEventsStream(spark, dir, "graft_ttl_src")(raw.limit(0),
+        raw.filter(col("event_id") % 2 === 0),
+        raw.filter(col("event_id") % 2 === 1))
       .select(col("user_id").as("station_id"))
       .as[graft.streaming.TwsTtl.KeyedRow]
     val out = drainToMemory(spark,
@@ -844,15 +866,7 @@ object EventOps {
     */
   def dedupStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
-    val stage = graft.util.Scratch.dir("graft_dedup_stream_src")
-    val base = System.currentTimeMillis()
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    stageParquetFile(raw.unionAll(raw.filter(col("event_id") % 2 === 1)),
-      stage, "batch1.parquet", base)
-    stageParquetFile(raw.filter(col("event_id") % 2 === 0),
-      stage, "batch2.parquet", base + 60000L)
-    val deduped = graft.util.EventTs.readEventsStream(spark, dir,
-        stage.toString, Map("maxFilesPerTrigger" -> "1"))
+    val deduped = replayedEventsStream(spark, dir, "graft_dedup_stream_src")
       .withWatermark("ts", "30 minutes")
       // the EVENT-TIME column must be part of the dedup key: Spark evicts
       // dedup state by key-embedded event time (WatermarkSupport's
@@ -1025,15 +1039,7 @@ object EventOps {
     */
   def dedupWithinWatermarkStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
-    val stage = graft.util.Scratch.dir("graft_dedup_wm_src")
-    val base = System.currentTimeMillis()
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    stageParquetFile(raw.unionAll(raw.filter(col("event_id") % 2 === 1)),
-      stage, "batch1.parquet", base)
-    stageParquetFile(raw.filter(col("event_id") % 2 === 0),
-      stage, "batch2.parquet", base + 60000L)
-    val deduped = graft.util.EventTs.readEventsStream(spark, dir,
-        stage.toString, Map("maxFilesPerTrigger" -> "1"))
+    val deduped = replayedEventsStream(spark, dir, "graft_dedup_wm_src")
       .withWatermark("ts", "30 minutes")
       .dropDuplicatesWithinWatermark("user_id", "event_id")
       .select(col("user_id").as("station_id"), col("event_id").as("s_no"),
@@ -1728,7 +1734,7 @@ object EventOps {
     val pred = s"event_id >= $cut AND value >= 100.0"
     val (k0, a0) = Snapshots.pruneFiles(spark, table, pred)
     val flatPruned = k0.size < a0.size
-    Snapshots.zorderRewriteRetry(spark, table, "event_id", "value")
+    Snapshots.zorderRewrite(spark, table, "event_id", "value")
     val (kId, aId) = Snapshots.pruneFiles(spark, table, s"event_id >= $cut")
     val (kV, aV) = Snapshots.pruneFiles(spark, table, "value >= 320.0")
     val nRows = Snapshots.read(spark, table).count()
@@ -1806,13 +1812,13 @@ object EventOps {
   }
 
   /** EXACTLY-ONCE streaming ingestion into the snapshot lake
-    * ([[graft.lake.Snapshots.appendBatch]] via foreachBatch) — the shape
+    * ([[graft.lake.Snapshots.streamAppend]]) — the shape
     * that turns Structured Streaming's at-least-once foreachBatch
     * delivery into an exactly-once TABLE: each micro-batch publishes one
     * lake version whose manifest records the batch id, and a
     * re-delivered batch id no-ops instead of double-appending. The gate
     * stages the events log as two mtime-ordered files
-    * (`maxFilesPerTrigger=1` → two batches), and inside foreachBatch
+    * (`maxFilesPerTrigger=1` → two batches), and the sink
     * DELIVERS EVERY BATCH TWICE — the second call simulates the
     * sink-failed-after-publish retry and must return None. Contract
     * columns: the per-type aggregate of the final table (a duplicated
@@ -1823,32 +1829,14 @@ object EventOps {
     * the commit log itself.
     */
   def streamSinkLake(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val stage = graft.util.Scratch.dir("graft_sink_src")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val base = System.currentTimeMillis()
-    stageParquetFile(raw.filter(col("event_id") % 2 === 0), stage,
-      "a.parquet", base)
-    stageParquetFile(raw.filter(col("event_id") % 2 === 1), stage,
-      "b.parquet", base + 60000)
-    val table = graft.util.Scratch.dir("graft_sink_lake").toString
-    val rec = graft.util.EventTs.readEventsStream(spark, dir, stage.toString,
-        options = Map("maxFilesPerTrigger" -> "1"))
+    val rec = stagedEventsStream(spark, dir, "graft_sink_src")(
+        raw.filter(col("event_id") % 2 === 0),
+        raw.filter(col("event_id") % 2 === 1))
       .select(col("user_id"), col("event_id"), col("event_type"))
-    val q = rec.writeStream
-      .option("checkpointLocation",
-        graft.util.Scratch.dir("graft_sink_ck").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (bdf: DataFrame, bid: Long) =>
-        val first = graft.lake.Snapshots.appendBatch(bdf, table, bid)
-        require(first.isDefined, s"batch $bid was not published")
-        // at-least-once redelivery simulated: same id again must no-op
-        val again = graft.lake.Snapshots.appendBatch(bdf, table, bid)
-        require(again.isEmpty, s"duplicate batch $bid published twice")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val table = graft.util.Scratch.dir("graft_sink_lake").toString
+    graft.lake.Snapshots.streamAppend(rec, table,
+      graft.util.Scratch.dir("graft_sink_ck").toString)(identity)
     graft.lake.Snapshots.read(spark, table)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1859,9 +1847,9 @@ object EventOps {
 
   /** CONCURRENT-WRITER composition — the OPTIMIZE-races-ingest
     * production incident: a streaming ingest publishes exactly-once
-    * batches ([[graft.lake.Snapshots.appendBatchRetry]]) WHILE a
+    * batches ([[graft.lake.Snapshots.streamAppend]]) WHILE a
     * compactor thread publishes content-preserving rewrites
-    * ([[graft.lake.Snapshots.rewriteRetry]]), both under the lake's
+    * ([[graft.lake.Snapshots.rewrite]]), both under the lake's
     * CAS + OCC-retry commit protocol. The contract is
     * interleaving-INVARIANT (which is what makes it oracle-checkable
     * despite a real race): whatever order the CAS serializes, the
@@ -1874,15 +1862,11 @@ object EventOps {
     * writer giving up) each break a pinned column.
     */
   def streamConcurrentWriters(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.lake.Snapshots
-    val stage = graft.util.Scratch.dir("graft_ccw_src")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val base = System.currentTimeMillis()
-    (0 until 3).foreach { i =>
-      stageParquetFile(raw.filter(col("event_id") % 3 === i), stage,
-        s"s$i.parquet", base + i * 60000L)
-    }
+    val rec = stagedEventsStream(spark, dir, "graft_ccw_src")(
+        (0 until 3).map(i => raw.filter(col("event_id") % 3 === i)): _*)
+      .select(col("user_id"), col("event_id"), col("event_type"))
     val table = graft.util.Scratch.dir("graft_ccw_lake").toString
     val nRewrites = 2
     @volatile var compactorErr: Option[Throwable] = None
@@ -1895,7 +1879,7 @@ object EventOps {
         var done = 0
         while (done < nRewrites) {
           if (Snapshots.latestVersion(table) >= 1) {
-            Snapshots.rewriteRetry(spark, table)
+            Snapshots.rewrite(spark, table)
             done += 1
             Thread.sleep(150) // spread rewrites across the batch drain
           } else Thread.sleep(5)
@@ -1904,27 +1888,8 @@ object EventOps {
     }, "graft-ccw-compactor")
     compactor.setDaemon(true)
     compactor.start()
-    val rec = graft.util.EventTs.readEventsStream(spark, dir,
-        stage.toString, options = Map("maxFilesPerTrigger" -> "1"))
-      .select(col("user_id"), col("event_id"), col("event_type"))
-    val q = rec.writeStream
-      .option("checkpointLocation",
-        graft.util.Scratch.dir("graft_ccw_ck").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (bdf: DataFrame, bid: Long) =>
-        // None is SUCCESS when the batch id is already at-or-below the
-        // table's high-water mark: Spark redelivers a batch under the
-        // same id after a crash between publish and checkpoint commit,
-        // and the exactly-once contract is precisely that the redelivery
-        // no-ops. Only fail when the batch is neither published now nor
-        // previously.
-        val published = Snapshots.appendBatchRetry(bdf, table, bid)
-          .isDefined || Snapshots.lastBatchId(table).exists(_ >= bid)
-        require(published, s"batch $bid was not published")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Snapshots.streamAppend(rec, table,
+      graft.util.Scratch.dir("graft_ccw_ck").toString)(identity)
     compactor.join(120000)
     compactorErr.foreach(t => throw t)
     require(!compactor.isAlive, "compactor did not finish its rewrites")
@@ -1952,7 +1917,7 @@ object EventOps {
     * against the PINNED bootstrap version (never the growing latest —
     * the reconciliation read stays bounded by the bootstrap forever,
     * and the stream's own batches are already exactly-once via
-    * [[graft.lake.Snapshots.appendBatch]]). Fixture: bootstrap covers
+    * [[graft.lake.Snapshots.streamAppend]]). Fixture: bootstrap covers
     * `id < T/2`; the stream's first file covers `[T/3, 2T/3)` (partial
     * overlap — half dies in the anti-join, half is fresh), its second
     * `[2T/3, ∞)` (pure tail). Contract columns: the per-type aggregate
@@ -1961,42 +1926,28 @@ object EventOps {
     * fresh half of the overlap batch.
     */
   def streamBackfill(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val t = raw.agg(max(col("event_id"))).collect()(0).getLong(0) + 1
     val (third, half, twoThird) = (t / 3, t / 2, 2 * t / 3)
-    val stage = graft.util.Scratch.dir("graft_bf_src")
-    val base = System.currentTimeMillis()
-    stageParquetFile(raw.filter(col("event_id") >= third &&
-      col("event_id") < twoThird), stage, "a.parquet", base)
-    stageParquetFile(raw.filter(col("event_id") >= twoThird), stage,
-      "b.parquet", base + 60000)
+    val rec = stagedEventsStream(spark, dir, "graft_bf_src")(
+        raw.filter(col("event_id") >= third && col("event_id") < twoThird),
+        raw.filter(col("event_id") >= twoThird))
+      .select(col("user_id"), col("event_id"), col("event_type"))
     val table = graft.util.Scratch.dir("graft_bf_lake").toString
     val vBoot = graft.lake.Snapshots.append(
       raw.filter(col("event_id") < half)
         .select(col("user_id"), col("event_id"), col("event_type")), table)
     val hwm = half - 1 // the bootstrap's recorded key high-water mark
-    val rec = graft.util.EventTs.readEventsStream(spark, dir, stage.toString,
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .select(col("user_id"), col("event_id"), col("event_type"))
-    val q = rec.writeStream
-      .option("checkpointLocation",
-        graft.util.Scratch.dir("graft_bf_ck").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (bdf: DataFrame, bid: Long) =>
-        val fresh = bdf.filter(col("event_id") > hwm)
-        val overlap = bdf.filter(col("event_id") <= hwm)
-        val merged =
-          if (overlap.isEmpty) fresh // steady state: no table read at all
-          else fresh.unionByName(overlap.join(
-            graft.lake.Snapshots.read(bdf.sparkSession, table, Some(vBoot))
-              .select(col("event_id")),
-            Seq("event_id"), "left_anti"))
-        graft.lake.Snapshots.appendBatch(merged, table, bid)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.lake.Snapshots.streamAppend(rec, table,
+        graft.util.Scratch.dir("graft_bf_ck").toString) { bdf =>
+      val fresh = bdf.filter(col("event_id") > hwm)
+      val overlap = bdf.filter(col("event_id") <= hwm)
+      if (overlap.isEmpty) fresh // steady state: no table read at all
+      else fresh.unionByName(overlap.join(
+        graft.lake.Snapshots.read(bdf.sparkSession, table, Some(vBoot))
+          .select(col("event_id")),
+        Seq("event_id"), "left_anti"))
+    }
     val rows = (1 to 3).map(v =>
       graft.lake.Snapshots.rowsWritten(table, v))
     graft.lake.Snapshots.read(spark, table)
@@ -2319,16 +2270,10 @@ object EventOps {
     * exactly the incremental-view promise, now on the streaming path.
     */
   def aggMaintainStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = graft.util.Scratch.dir("graft_mv_src")
-    val base = System.currentTimeMillis()
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    (0 until 3).foreach { i =>
-      stageParquetFile(raw.filter(col("event_id") % 3 === i),
-        stage, s"b$i.parquet", base + i * 60000)
-    }
+    val stream = stagedEventsStream(spark, dir, "graft_mv_src")(
+      (0 until 3).map(i => raw.filter(col("event_id") % 3 === i)): _*)
     val sumRoot = graft.util.Scratch.dir("graft_mv_sum").toString
-    val stream = graft.util.EventTs.readEventsStream(spark, dir,
-      stage.toString, Map("maxFilesPerTrigger" -> "1"))
     val q = stream.writeStream
       .option("checkpointLocation",
         graft.util.Scratch.dir("graft_mv_ck").toString)

@@ -607,41 +607,57 @@ class MergeUpsertSpec extends SparkSpec {
   test("concurrent appends and rewrites serialize under OCC retry: no lost or doubled rows") {
     import spark.implicits._
     import graft.lake.Snapshots
-    val table = graft.util.Scratch.dir("graft_ccw_spec").toString
-    val nBatches = 6; val nRewrites = 4
-    @volatile var err: Option[Throwable] = None
-    val compactor = new Thread(() => {
-      try {
-        var done = 0
-        while (done < nRewrites) {
-          if (Snapshots.latestVersion(table) >= 1) {
-            Snapshots.rewriteRetry(spark, table); done += 1
-          } else Thread.sleep(2)
-        }
-      } catch { case t: Throwable => err = Some(t) }
-    })
-    compactor.start()
-    (0 until nBatches).foreach { b =>
-      val slice = ((b * 10) until (b * 10 + 10)).map(i => (i.toLong, s"r$i"))
-      assert(Snapshots.appendBatchRetry(
-        slice.toDF("k", "s"), table, b.toLong).isDefined,
-        s"batch $b must eventually publish")
-      // duplicate delivery of a published id stays a no-op under retry
-      assert(Snapshots.appendBatchRetry(
-        slice.toDF("k", "s"), table, b.toLong).isEmpty)
+    val nBatches = 8; val minRewrites = 2
+    // two compactors race the ingest: a coalescing rewrite and a z-order
+    // rewrite (a longer read-and-publish). Each compacts back to back for
+    // the whole ingest, and the ingest pauses a seeded 0-400 ms between
+    // batches, so a rewrite that started in a pause outruns the next
+    // append: appends lose CASes as well as win them
+    val compactors = Seq[(String, String => Int)](
+      "rewrite" -> (t => Snapshots.rewrite(spark, t)),
+      "zorderRewrite" -> (t => Snapshots.zorderRewrite(spark, t, "k", "v",
+        targetFiles = 2)))
+    for ((name, compact) <- compactors) {
+      val table = graft.util.Scratch.dir(s"graft_ccw_spec_$name").toString
+      @volatile var err: Option[Throwable] = None
+      @volatile var ingesting = true
+      @volatile var done = 0
+      val compactor = new Thread(() => {
+        try {
+          while (ingesting || done < minRewrites) {
+            if (Snapshots.latestVersion(table) >= 1) {
+              compact(table); done += 1
+            } else Thread.sleep(2)
+          }
+        } catch { case t: Throwable => err = Some(t) }
+      })
+      compactor.start()
+      val pause = new scala.util.Random(7)
+      (0 until nBatches).foreach { b =>
+        Thread.sleep(pause.nextInt(400))
+        val slice = ((b * 10) until (b * 10 + 10))
+          .map(i => (i.toLong, (i * 7 % 13).toLong))
+        assert(Snapshots.appendBatch(
+          slice.toDF("k", "v"), table, b.toLong).isDefined,
+          s"$name: batch $b must eventually publish")
+        // duplicate delivery of a published id stays a no-op under retry
+        assert(Snapshots.appendBatch(
+          slice.toDF("k", "v"), table, b.toLong).isEmpty)
+      }
+      ingesting = false
+      compactor.join(120000)
+      err.foreach(t => throw t)
+      assert(!compactor.isAlive)
+      // interleaving-invariant contract: every row exactly once, every
+      // publication exactly one version, history = appends + rewrites
+      val ks = Snapshots.read(spark, table).select("k")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ks == (0L until (nBatches * 10).toLong), name)
+      assert(Snapshots.latestVersion(table) == nBatches + done, name)
+      val ops = Snapshots.history(spark, table).collect()
+        .groupBy(_.getString(1)).map { case (k, v) => k -> v.length }
+      assert(ops == Map("append" -> nBatches, "rewrite" -> done), name)
     }
-    compactor.join(120000)
-    err.foreach(t => throw t)
-    assert(!compactor.isAlive)
-    // interleaving-invariant contract: every row exactly once, every
-    // publication exactly one version, history = appends + rewrites
-    val ks = Snapshots.read(spark, table).select("k")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(ks == (0L until (nBatches * 10).toLong))
-    assert(Snapshots.latestVersion(table) == nBatches + nRewrites)
-    val ops = Snapshots.history(spark, table).collect()
-      .groupBy(_.getString(1)).map { case (k, v) => k -> v.length }
-    assert(ops == Map("append" -> nBatches, "rewrite" -> nRewrites))
   }
 
   test("change feed refuses spans crossing a rewrite/delete; empty delta is empty, not an error") {

@@ -33,6 +33,20 @@ class ToolSpec extends SparkSpec {
     assert(q1.contains("== Physical Plan =="), q1.take(400))
   }
 
+  test("Bench keeps every run's file-side line and refreshes the stable path") {
+    val out = Paths.get(tmpDir("bench_out"), "bench.json")
+    val first = Bench.writeRun(out, """{"run":1}""", 1000L)
+    // the same millisecond again must not overwrite the first run
+    val second = Bench.writeRun(out, """{"run":2}""", 1000L)
+    assert(first != second)
+    assert(Files.readString(first) == "{\"run\":1}\n")
+    assert(Files.readString(second) == "{\"run\":2}\n")
+    assert(Files.readString(out) == "{\"run\":2}\n")
+    assert(new java.io.File(out.getParent.toString).list().toSet ==
+      Set("bench.json", first.getFileName.toString,
+        second.getFileName.toString))
+  }
+
   test("probe measures a named gate's rows and shuffle") {
     assert(Tool.run(spark, Tool.Probe(sf, Seq("q1_pricing_summary"))) == 0)
   }

@@ -4,8 +4,10 @@
 Usage: python3 tools/benchdiff.py <old_bench.json> <new_bench.json> [ratio]
 
 Compares per-query seconds between two bench files (driver BENCH_r*.json
-with a "parsed" wrapper, or target/bench.json written by graft.Bench)
-and prints every common query whose new/old ratio exceeds the threshold
+with a "parsed" wrapper, or a file-side line written by graft.Bench:
+target/bench.json holds the latest run, and every run is also kept as
+target/bench-<epochMillis>.json beside it, so two local runs can be
+compared with each other) and prints every common query whose new/old ratio exceeds the threshold
 (default 1.3), plus totals over the common set. This is the discipline
 the verdicts apply by hand each round — run it locally BEFORE the driver
 does: a regression caught here is a fix; one caught by the judge is a
